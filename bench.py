@@ -115,7 +115,7 @@ def main() -> None:
         # includes this bench's own 32 local threads (expected high)
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in load_end],
-        "cpus": os.cpu_count(),
+        "cpus": spark.sparkContext.defaultParallelism,  # local[N]
         "reps_per_query": reps,
         "warmup": "one untimed pass per query (warm protocol)",
         "quiesce": quiesce,

@@ -10,28 +10,30 @@ A migrating user writes the SAME program shape they had::
            .within("48 hours").no_skip())
     matches = stream.key_by("user_id").pattern(pat)
 
-and the pattern COMPILES to the engine's oracle-backed plans (the
-sequence_ops.py machines — test-pinned equal to q_cep_times,
-q_cep_followed_by, q_cep_followed_by_all, q_cep_not_followed_by):
+and the pattern COMPILES to one of the engine's machines below. This
+module is the ONE implementation of each: the sequence_ops CEP keys
+(q_sequence_pattern, q_cep_followed_by[_within|_all], q_cep_one_or_more,
+q_cep_times, q_cep_not_followed_by, q_cep_match_measures) are Pattern
+values compiled here, and each key's DuckDB oracle replays its machine
+independently:
 
 - strict `next` chains (with `times(n)` / `one_or_more()` quantifiers,
   including on the BEGIN stage) → one per-key path of single-char stage
-  codes + regex count, all codegen, one shuffle (sequence_ops.q_cep_times
-  / q_cep_one_or_more shape). Event types map to code chars BEFORE the
-  regex is built, so types that are substrings of each other
+  codes + regex count, all codegen, one shuffle (q_sequence_pattern,
+  q_cep_times, q_cep_one_or_more). Event types map to code chars BEFORE
+  the regex is built, so types that are substrings of each other
   ('click' in 'doubleclick') or contain regex metacharacters can never
   corrupt the count;
 - relaxed `followed_by` chains under the default AFTER MATCH SKIP PAST
   LAST EVENT → a K-stage integer automaton folded with F.aggregate
-  (sequence_ops.q_cep_followed_by shape, generalized to K stages);
-  with `within()` the accumulator gains the anchor timestamp and
-  expires partials before each transition (q_cep_followed_by_within
-  shape, generalized — O(1) state either way);
+  (q_cep_followed_by); with `within()` the accumulator gains the anchor
+  timestamp and expires partials before each transition
+  (q_cep_followed_by_within — O(1) state either way);
 - relaxed chains under `no_skip()` (Flink's default forking NFA) with
-  `within()` → the open-anchor-set fold (q_cep_followed_by_all shape,
-  generalized: state = K-1 anchor arrays bounded by expiry);
+  `within()` → the open-anchor-set fold (q_cep_followed_by_all: state =
+  K-1 anchor arrays bounded by expiry);
 - `begin(a).not_followed_by(b).within(d)` → a LEFT ANTI time-band join
-  (q_cep_not_followed_by shape) returning the absent-match anchors.
+  returning the absent-match anchors (q_cep_not_followed_by).
 
 All relaxed machines key transitions by STAGE INDEX (each stage carries
 its awaited type code; advancement compares the event's type code to
@@ -80,9 +82,9 @@ forking machines as pure-relaxed chains, batch and streaming. Pure
 `next` chains keep the faster regex path.
 
 On a STREAMING keyed input the same Pattern compiles to the keyed-state
-NFA twin (applyInPandasWithState; update-mode running counts) — the
-machine streaming/jobs.cep_followed_by[_all]_stream pins across
-micro-batch boundaries, generalized to K stages. `pattern_matches()`
+NFA twin (applyInPandasWithState; update-mode running counts) —
+streaming/jobs.cep_followed_by[_all]_stream run the sequence_ops keys'
+own Pattern values through it across micro-batch boundaries. `pattern_matches()`
 also runs on streams: the steppers carry anchor (t, id) bindings in
 state and APPEND one row per newly-completed match, converging to the
 batch bindings.
@@ -3659,9 +3661,9 @@ def relaxed_stepper_scalar(type_codes: dict[str, int] | None,
                     key_cols: list[str] | None = None,
                     veto: list[int] | None = None):
     """applyInPandasWithState step for the skip-past-last machine —
-    the streaming/jobs._cep_advance register (cnt, stage), generalized
-    to K stages with stage-index transitions and per-stage strict
-    (next) awaits that kill-or-re-anchor the run on a miss. State
+    the O(1) register (cnt, stage) of the batch fold, over K stages
+    with stage-index transitions and per-stage strict (next) awaits
+    that kill-or-re-anchor the run on a miss. State
     survives micro-batch boundaries. `key_cols` names the (possibly
     COMPOSITE) key columns — Flink's keyBy(a, b) shape; the input is
     projected keys-first, so the payload offset is len(key_cols).
@@ -3833,11 +3835,10 @@ def fork_stepper_scalar(type_codes: dict[str, int] | None,
                  strict: list[bool] | None = None,
                  key_cols: list[str] | None = None,
                  veto: list[int] | None = None):
-    """applyInPandasWithState step for the forking NFA — the
-    streaming/jobs._cep_fork_advance anchor-set machine, generalized:
-    state = (cnt, s1..s_{K-1} anchor-µs arrays), expiry applied before
-    every transition so state stays bounded by per-key density inside
-    `within`. Transitions read the PRE-event snapshot, so repeated
+    """applyInPandasWithState step for the forking NFA — the batch
+    anchor-set fold as keyed state: state = (cnt, s1..s_{K-1} anchor-µs
+    arrays), expiry applied before every transition so state stays
+    bounded by per-key density inside `within`. Transitions read the PRE-event snapshot, so repeated
     adjacent stage types drain-and-refill in one step like the batch
     fold."""
     K = len(stage_codes)

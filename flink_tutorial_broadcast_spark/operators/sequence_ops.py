@@ -2,19 +2,24 @@
 matching, calendar gap-fill, z-score anomaly detection, and percentile-
 band filtering.
 
-The pattern matcher is the batch analogue of Flink CEP — the event-
+The pattern matchers are the batch analogue of Flink CEP — the event-
 pattern library that sits beside the reference's broadcast-state API
-([FLINK-API `org.apache.flink.cep.CEP#pattern`], `Pattern.begin("v")
-.next("c").next("p")` strict contiguity). Spark has no MATCH_RECOGNIZE,
-so the Spark-first formulation is: order each key's events into a path
-string (one ordered collect per key — exactly the state CEP's NFA keeps)
-and run the pattern as a regex count. The others are the audit/repair
-ops a 100 TB training pipeline runs nightly.
+([FLINK-API `org.apache.flink.cep.CEP#pattern`]). Every CEP key here is
+a `cep.Pattern` value compiled by `cep.py`: the key supplies the
+pattern, its oracle SQL and its output columns; the machine (regex
+path, integer-automaton fold, forking anchor-set fold, time-band
+anti-join) is `cep.py`'s, as is the keyed-state stepper the streaming
+twins in `streaming/jobs.py` run from the SAME `Pattern` constants
+defined below. Each oracle replays its machine independently in DuckDB
+SQL, so a hash match pins the compiled machine, not just the
+compiler's agreement with itself. The others are the audit/repair ops
+a 100 TB training pipeline runs nightly.
 
 Scale notes:
-- Pattern paths: one shuffle on user_id; per-user path strings are
-  bounded by events-per-user, not corpus size. For unbounded keys, bound
-  the collect with a time window first (same as CEP's within()).
+- Pattern machines: one shuffle on user_id; per-key state is bounded
+  by events-per-user (and by `within()` for the forking machines), not
+  corpus size. Events matching no stage are dropped before the shuffle
+  where the machine allows it (`cep._prefilter_irrelevant`).
 - Gap-fill generates the calendar spine with `sequence()` — O(days), not
   O(rows) — and left-joins counts onto it; the big side never re-shuffles.
 - The z-score pass computes per-group moments ONCE (tiny agg, broadcast
@@ -28,8 +33,42 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_tutorial_broadcast_spark import cep
+from flink_tutorial_broadcast_spark.cep import Pattern
 from flink_tutorial_broadcast_spark.io import load
 from flink_tutorial_broadcast_spark.registry import query
+
+# The view/click/purchase patterns behind the CEP keys below AND their
+# streaming twins in streaming/jobs.py: one definition per pattern, so
+# the batch and keyed-state paths compile the same machine. Pattern
+# builders mutate in place — never chain further verbs onto these.
+CEP_STRICT = (Pattern.begin("v", "view")
+              .next("c", "click")
+              .next("p", "purchase"))
+CEP_FOLLOWED_BY = (Pattern.begin("v", "view")
+                   .followed_by("c", "click")
+                   .followed_by("p", "purchase"))
+CEP_FOLLOWED_BY_WITHIN = (Pattern.begin("v", "view")
+                          .followed_by("c", "click")
+                          .followed_by("p", "purchase")
+                          .within("48 hours"))
+CEP_FOLLOWED_BY_ALL = (Pattern.begin("v", "view")
+                       .followed_by("c", "click")
+                       .followed_by("p", "purchase")
+                       .within("48 hours").no_skip())
+CEP_ONE_OR_MORE = (Pattern.begin("v", "view")
+                   .next("c", "click").one_or_more()
+                   .next("p", "purchase"))
+CEP_TIMES = (Pattern.begin("v", "view")
+             .next("c", "click").times(2)
+             .next("p", "purchase"))
+CEP_NOT_FOLLOWED_BY = (Pattern.begin("v", "view")
+                       .not_followed_by("p", "purchase")
+                       .within("12 hours"))
+
+# the compilers' (keys, time, tiebreak, event-type) arguments for the
+# events table: keyed by user, ordered by (ts, event_id)
+CEP_EVENTS = (["user_id"], "ts", "event_id", "event_type")
 
 
 @query(
@@ -49,37 +88,13 @@ from flink_tutorial_broadcast_spark.registry import query
 )
 def q_sequence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP strict-contiguity pattern: users whose event stream contains
-    view NEXT click NEXT purchase (Flink CEP ``begin.next.next``), with
-    the non-overlapping match count.
-
-    Path construction sorts each user's events by the verified-unique
-    (ts, event_id) ordering via array_sort over structs — deterministic
-    on any engine. Strict contiguity (CEP `next`) maps to a plain
-    substring scan; relaxed contiguity (`followedBy`) would be
-    '(>[a-z]+)*?>' gaps, deliberately avoided because lazy-quantifier
-    semantics differ across regex engines.
+    view NEXT click NEXT purchase (Flink CEP ``begin.next.next``
+    [FLINK-API `Pattern#next`]), with the non-overlapping match count.
+    Compiles on cep.py's strict regex path; the oracle counts the same
+    leftmost non-overlapping matches over DuckDB's per-user path string.
     """
     ev = load(spark, sf_dir, "events")
-    paths = (
-        ev.groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("ts", "event_id", "event_type"))),
-                    lambda x: x["event_type"],
-                ),
-                ">",
-            ).alias("path")
-        )
-    )
-    n = F.size(F.regexp_extract_all(
-        "path", F.lit("(view>click>purchase)"), 1))
-    return (
-        paths.select("user_id", n.cast("long").alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_STRICT, ev, *CEP_EVENTS)
 
 
 @query(
@@ -115,41 +130,16 @@ def q_cep_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     under AFTER MATCH SKIP PAST LAST EVENT (each event binds to at
     most one match; earliest-match greedy — exactly the NFA run Flink
     executes with that skip strategy, and SQL MATCH_RECOGNIZE's
-    default).
-
-    Both engines run the IDENTICAL integer stage machine as an ordered
-    fold: acc = 10*completed_matches + stage, advance on the awaited
-    code, +8 closes a match (count+1, stage reset). Spark folds with
-    ``F.aggregate`` inside codegen — no Python, one shuffle on
-    user_id; per-user state is one int, the same O(1) state the CEP
-    NFA keeps. The oracle runs the same machine as a recursive-CTE
-    step relation (one row per (user, position)), so the hash match
-    proves the automaton, not just the row counts. (A list_reduce
-    oracle was rejected: DuckDB 1.0's vectorized lambda mis-folds one
-    of 150 lists in full-batch runs — verified against a Python
-    reference — while per-user filtered runs are correct.)
+    default). Compiles on cep.py's single-anchor stage machine; the
+    oracle replays the same integer automaton as a recursive-CTE step
+    relation (one row per (user, position)), so the hash match proves
+    the automaton, not just the row counts. (A list_reduce oracle was
+    rejected: DuckDB 1.0's vectorized lambda mis-folds one of 150 lists
+    in full-batch runs — verified against a Python reference — while
+    per-user filtered runs are correct.)
     """
     ev = load(spark, sf_dir, "events")
-    codes = F.transform(
-        F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-        lambda x: F.when(x["event_type"] == "view", 1)
-                   .when(x["event_type"] == "click", 2)
-                   .when(x["event_type"] == "purchase", 3)
-                   .otherwise(0),
-    )
-    fold = F.aggregate(
-        codes,
-        F.lit(0),
-        lambda acc, x: F.when(
-            x == acc % 10 + 1,
-            F.when(acc % 10 == 2, acc + 8).otherwise(acc + 1),
-        ).otherwise(acc),
-    )
-    return (
-        ev.groupBy("user_id")
-        .agg(F.floor(fold / 10).cast("long").alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_FOLLOWED_BY, ev, *CEP_EVENTS)
 
 
 _CEP_WITHIN_US = 43_200 * 1_000_000  # 12 h, in integer microseconds
@@ -232,30 +222,13 @@ def q_cep_not_followed_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase by the same user inside the 12-hour horizon — cart
     abandonment, the canonical negative pattern. By construction this is
     the exact complement of q_cep_within's view set (same bound, same
-    universe — test-pinned partition property).
-
-    Spark-first: a LEFT ANTI join on (user, time-band) — the absence
-    NFA state is just 'no match found', which the anti-join computes
-    with one user-keyed shuffle and no window sort. Same bucketed-range
-    rewrite applies at horizon ≫ key density.
+    universe — test-pinned partition property). Compiles to cep.py's
+    LEFT ANTI time-band join (no state, one user-keyed shuffle); the
+    anchor ids are the absent-match views.
     """
     ev = load(spark, sf_dir, "events")
-    v = (ev.filter(F.col("event_type") == "view")
-         .select("user_id", F.col("event_id").alias("view_id"),
-                 F.unix_micros("ts").alias("v_us")))
-    p = (ev.filter(F.col("event_type") == "purchase")
-         .select(F.col("user_id").alias("p_user"),
-                 F.unix_micros("ts").alias("p_us")))
-    return (
-        v.join(
-            p,
-            (v.user_id == p.p_user)
-            & (F.col("p_us") > F.col("v_us"))
-            & (F.col("p_us") <= F.col("v_us") + F.lit(_CEP_WITHIN_US)),
-            "left_anti",
-        )
-        .select("user_id", "view_id")
-    )
+    return (cep.compile_pattern(CEP_NOT_FOLLOWED_BY, ev, *CEP_EVENTS)
+            .select("user_id", F.col("anchor_id").alias("view_id")))
 
 
 _CEP_FBW_US = 48 * 3600 * 1_000_000  # followedBy+within horizon: 48 h
@@ -302,10 +275,11 @@ _CEP_FBW_US = 48 * 3600 * 1_000_000  # followedBy+within horizon: 48 h
 )
 def q_cep_followed_by_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP relaxed contiguity WITH a time bound (Flink ``begin("v")
-    .followedBy("c").followedBy("p").within(Time.hours(48))`` — the
-    combination real Flink patterns ship with, since unbounded
-    followedBy state grows forever): a match must complete within 48 h
-    of its anchoring view, else the partial match is pruned.
+    .followedBy("c").followedBy("p").within(Time.hours(48))``
+    [FLINK-API `Pattern#within`] — the combination real Flink patterns
+    ship with, since unbounded followedBy state grows forever): a match
+    must complete within 48 h of its anchoring view, else the partial
+    match is pruned.
 
     Semantics: the single-anchor greedy automaton — O(1) state
     (count, stage, anchor_ts); on every event an expired partial resets
@@ -315,45 +289,13 @@ def q_cep_followed_by_within(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternative partial on an intermediate view, this machine keeps one
     anchor — the deterministic trade documented here and pinned by the
     Python-reference test (the forking multi-anchor semantics are the
-    separate oracle-backed key q_cep_followed_by_all). Both engines run
-    the IDENTICAL machine
-    (Spark: struct-accumulator fold in codegen; oracle: recursive-CTE
-    step relation with the expiry applied via LATERAL before the
-    transition), integer-microsecond time arithmetic throughout.
+    separate oracle-backed key q_cep_followed_by_all). The oracle
+    replays the same machine as a recursive-CTE step relation with the
+    expiry applied via LATERAL before the transition, in integer
+    microseconds.
     """
     ev = load(spark, sf_dir, "events")
-    seq = F.array_sort(F.collect_list(F.struct(
-        F.unix_micros("ts").alias("t"),
-        F.col("event_id").alias("eid"),
-        F.when(F.col("event_type") == "view", 1)
-         .when(F.col("event_type") == "click", 2)
-         .when(F.col("event_type") == "purchase", 3)
-         .otherwise(0).alias("c"))))
-    init = F.struct(F.lit(0).alias("cnt"), F.lit(0).alias("stage"),
-                    F.lit(0).cast("long").alias("anchor"))
-
-    def step(acc, x):
-        stage = F.when(
-            (acc["stage"] > 0) & (x["t"] - acc["anchor"] > _CEP_FBW_US),
-            F.lit(0)).otherwise(acc["stage"])
-        new_cnt = F.when((stage == 2) & (x["c"] == 3),
-                         acc["cnt"] + 1).otherwise(acc["cnt"])
-        new_stage = (
-            F.when((stage == 0) & (x["c"] == 1), F.lit(1))
-            .when((stage == 1) & (x["c"] == 2), F.lit(2))
-            .when((stage == 2) & (x["c"] == 3), F.lit(0))
-            .otherwise(stage))
-        new_anchor = F.when((stage == 0) & (x["c"] == 1),
-                            x["t"]).otherwise(acc["anchor"])
-        return F.struct(new_cnt.alias("cnt"), new_stage.alias("stage"),
-                        new_anchor.alias("anchor"))
-
-    fold = F.aggregate(seq, init, step)
-    return (
-        ev.groupBy("user_id")
-        .agg(fold["cnt"].cast("long").alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_FOLLOWED_BY_WITHIN, ev, *CEP_EVENTS)
 
 
 @query(
@@ -404,51 +346,15 @@ def q_cep_followed_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_cep_followed_by / q_cep_followed_by_within) deliberately trade
     away, closing that documented divergence.
 
-    State is the open-anchor sets: `s1` = anchor timestamps awaiting a
-    click, `s2` = anchors awaiting a purchase (followedBy binds each
-    partial to the FIRST qualifying next event, so every stage-1 anchor
-    transitions on the same click). Per event: expire anchors older
-    than `within` FIRST (exactly the pruning that keeps Flink NFA state
-    bounded — without `within` the anchor set grows forever), then
-    view→append to s1, click→s1 drains into s2, purchase→count += |s2|.
-    Both engines run this identical machine: Spark as a codegen'd
-    `F.aggregate` fold whose accumulator holds the two anchor ARRAYS
-    (bounded by per-user event density inside 48 h), the oracle as a
-    recursive-CTE step relation with LIST-typed state columns, expiry
-    applied via LATERAL before the transition. A brute-force Python NFA
-    pins parity in tests.
+    Compiles on cep.py's forking anchor-set machine (open anchors per
+    stage, expired FIRST on every event — exactly the pruning that
+    keeps Flink NFA state bounded). The oracle replays the same machine
+    as a recursive-CTE step relation with LIST-typed state columns,
+    expiry applied via LATERAL before the transition; a brute-force
+    Python NFA pins parity in tests.
     """
     ev = load(spark, sf_dir, "events")
-    seq = F.array_sort(F.collect_list(F.struct(
-        F.unix_micros("ts").alias("t"),
-        F.col("event_id").alias("eid"),
-        F.when(F.col("event_type") == "view", 1)
-         .when(F.col("event_type") == "click", 2)
-         .when(F.col("event_type") == "purchase", 3)
-         .otherwise(0).alias("c"))))
-    empty = F.array().cast("array<long>")
-    init = F.struct(F.lit(0).cast("long").alias("cnt"),
-                    empty.alias("s1"), empty.alias("s2"))
-
-    def step(acc, x):
-        s1f = F.filter(acc["s1"], lambda a: x["t"] - a <= _CEP_FBW_US)
-        s2f = F.filter(acc["s2"], lambda a: x["t"] - a <= _CEP_FBW_US)
-        new_cnt = F.when(x["c"] == 3,
-                         acc["cnt"] + F.size(s2f).cast("long")) \
-                   .otherwise(acc["cnt"])
-        new_s1 = (F.when(x["c"] == 1, F.concat(s1f, F.array(x["t"])))
-                  .when(x["c"] == 2, empty).otherwise(s1f))
-        new_s2 = (F.when(x["c"] == 2, F.concat(s2f, s1f))
-                  .when(x["c"] == 3, empty).otherwise(s2f))
-        return F.struct(new_cnt.alias("cnt"), new_s1.alias("s1"),
-                        new_s2.alias("s2"))
-
-    fold = F.aggregate(seq, init, step)
-    return (
-        ev.groupBy("user_id")
-        .agg(fold["cnt"].alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_FOLLOWED_BY_ALL, ev, *CEP_EVENTS)
 
 
 @query(
@@ -470,36 +376,14 @@ def q_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP quantified pattern (Flink ``begin("v").next("c").oneOrMore()
     .next("p")`` [FLINK-API `Pattern#oneOrMore`]): view, then ONE OR
     MORE contiguous clicks, then purchase — non-overlapping greedy
-    match count over the ordered per-user path.
-
-    Same path construction as q_sequence_pattern (array_sort over the
-    unique (ts, event_id) prefix). The `(>click)+` quantifier is safe
-    cross-engine: the follow-set of the quantified element ('>click')
-    is disjoint from the closer ('>purchase'), so backtracking (Java)
-    and leftmost-longest DFA (RE2/DuckDB) produce identical matches —
-    the same discipline that kept q_sequence_pattern's regex portable.
+    match count over the ordered per-user path. Compiles on cep.py's
+    strict regex path; the oracle's `(>click)+` quantifier is safe
+    cross-engine because the follow-set of the quantified element is
+    disjoint from the closer ('>purchase'), so backtracking (Java) and
+    leftmost-longest DFA (RE2/DuckDB) produce identical matches.
     """
     ev = load(spark, sf_dir, "events")
-    paths = (
-        ev.groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("ts", "event_id", "event_type"))),
-                    lambda x: x["event_type"],
-                ),
-                ">",
-            ).alias("path")
-        )
-    )
-    n = F.size(F.regexp_extract_all(
-        "path", F.lit("(view(>click)+>purchase)"), 1))
-    return (
-        paths.select("user_id", n.cast("long").alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_ONE_OR_MORE, ev, *CEP_EVENTS)
 
 
 @query(
@@ -547,66 +431,19 @@ def q_cep_one_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cep_match_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP match extraction (Flink ``PatternStream.select`` / SQL
-    MATCH_RECOGNIZE MEASURES): not just HOW MANY view…click…purchase
-    matches, but each match's bindings — anchoring view id, closing
-    purchase id, and span — one output row per completed match, numbered
-    per user.
+    MATCH_RECOGNIZE MEASURES [FLINK-API `PatternStream#select`]): not
+    just HOW MANY view…click…purchase matches, but each match's
+    bindings — anchoring view id, closing purchase id, and span — one
+    output row per completed match, numbered per user.
 
-    Same skip-past-last-event automaton as q_cep_followed_by, with the
-    accumulator widened to carry the anchor bindings and an array of
-    completed matches; Spark folds it in codegen and posexplodes the
-    array (rows = matches, never events²), the oracle replays the
-    machine as a recursive CTE and emits the completion steps. Hash
-    equality therefore pins the full per-match BINDINGS cross-engine,
-    strictly stronger than the count check.
+    Same skip-past-last-event pattern as q_cep_followed_by, compiled by
+    cep.compile_pattern_matches (rows = matches, never events²); the
+    oracle replays the machine as a recursive CTE and emits the
+    completion steps. Hash equality therefore pins the full per-match
+    BINDINGS cross-engine, strictly stronger than the count check.
     """
     ev = load(spark, sf_dir, "events")
-    seq = F.array_sort(F.collect_list(F.struct(
-        F.unix_micros("ts").alias("t"),
-        F.col("event_id").alias("eid"),
-        F.when(F.col("event_type") == "view", 1)
-         .when(F.col("event_type") == "click", 2)
-         .when(F.col("event_type") == "purchase", 3)
-         .otherwise(0).alias("c"))))
-    empty = F.expr(
-        "CAST(array() AS array<struct<start_id:bigint,end_id:bigint,"
-        "span_us:bigint>>)")
-    init = F.struct(F.lit(0).alias("stage"),
-                    F.lit(0).cast("long").alias("anchor_id"),
-                    F.lit(0).cast("long").alias("anchor_t"),
-                    empty.alias("matches"))
-
-    def step(acc, x):
-        done = (acc["stage"] == 2) & (x["c"] == 3)
-        new_stage = (
-            F.when((acc["stage"] == 0) & (x["c"] == 1), F.lit(1))
-            .when((acc["stage"] == 1) & (x["c"] == 2), F.lit(2))
-            .when(done, F.lit(0))
-            .otherwise(acc["stage"]))
-        new_anchor_id = F.when((acc["stage"] == 0) & (x["c"] == 1),
-                               x["eid"]).otherwise(acc["anchor_id"])
-        new_anchor_t = F.when((acc["stage"] == 0) & (x["c"] == 1),
-                              x["t"]).otherwise(acc["anchor_t"])
-        m = F.struct(acc["anchor_id"].alias("start_id"),
-                     x["eid"].alias("end_id"),
-                     (x["t"] - acc["anchor_t"]).alias("span_us"))
-        new_matches = F.when(done, F.concat(acc["matches"], F.array(m))) \
-                       .otherwise(acc["matches"])
-        return F.struct(new_stage.alias("stage"),
-                        new_anchor_id.alias("anchor_id"),
-                        new_anchor_t.alias("anchor_t"),
-                        new_matches.alias("matches"))
-
-    folded = ev.groupBy("user_id").agg(
-        F.aggregate(seq, init, step)["matches"].alias("matches"))
-    return (
-        folded.select("user_id", F.posexplode("matches"))
-        .select("user_id",
-                (F.col("pos") + 1).cast("long").alias("match_no"),
-                F.col("col.start_id").alias("start_event_id"),
-                F.col("col.end_id").alias("end_event_id"),
-                F.col("col.span_us").alias("span_us"))
-    )
+    return cep.compile_pattern_matches(CEP_FOLLOWED_BY, ev, *CEP_EVENTS)
 
 
 @query(
@@ -627,32 +464,14 @@ def q_cep_match_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cep_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CEP exact-count quantifier (Flink ``begin("v").next("c").times(2)
     .next("p")`` [FLINK-API `Pattern#times`]): view, EXACTLY two
-    contiguous clicks, then purchase. A fixed `{2}` count has no
-    backtracking freedom, so Java and RE2 agree by construction; a
-    third contiguous click correctly kills the match on both engines
-    (strict contiguity — `times` under `next` semantics).
+    contiguous clicks, then purchase. Compiles on cep.py's strict regex
+    path; a fixed `{2}` count has no backtracking freedom, so Java and
+    RE2 agree by construction, and a third contiguous click correctly
+    kills the match on both engines (strict contiguity — `times` under
+    `next` semantics).
     """
     ev = load(spark, sf_dir, "events")
-    paths = (
-        ev.groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct("ts", "event_id", "event_type"))),
-                    lambda x: x["event_type"],
-                ),
-                ">",
-            ).alias("path")
-        )
-    )
-    n = F.size(F.regexp_extract_all(
-        "path", F.lit("(view(>click){2}>purchase)"), 1))
-    return (
-        paths.select("user_id", n.cast("long").alias("n_matches"))
-        .filter(F.col("n_matches") > 0)
-    )
+    return cep.compile_pattern(CEP_TIMES, ev, *CEP_EVENTS)
 
 
 @query(
@@ -692,7 +511,6 @@ def q_cep_facade(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stage in acc%10, +9 closes a match), so the hash match pins the
     compiled machine itself, not just counts-by-construction. The same
     Pattern object's streaming run is pinned by test_cep_facade.py."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -748,7 +566,6 @@ def q_cep_repeated_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     + stage), so the hash match pins the stage-indexed machine itself.
     Property twin: test_cep_properties.test_cep_repeated_stage_*
     (random sequences vs a pure-Python NFA, batch and streaming)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -794,7 +611,6 @@ def q_cep_strict_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     Property twin: test_cep_properties.test_kmp_stepper_*; streaming
     convergence: test_cep_facade.test_pattern_streaming_strict_
     repeated_converges_to_batch."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -843,7 +659,6 @@ def q_cep_absence_emitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark computed distributively (broadcast 1-row max, no
     collect); streaming equivalence is pinned by
     test_pattern_streaming_absence_timer_driven."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -918,18 +733,13 @@ def q_cep_chunked_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key history to per-(key, chunk) density
     (cep.compile_pattern_chunked; skip-past-last chunking stays
     refused with the consumption-chain argument)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
     env = StreamExecutionEnvironment.get_execution_environment(spark)
-    pat = (Pattern.begin("v", "view")
-           .followed_by("c", "click")
-           .followed_by("p", "purchase")
-           .within("48 hours").no_skip())
     return (env.from_dataframe(load(spark, sf_dir, "events"))
             .key_by("user_id")
-            .pattern(pat, chunked=True, chunk_horizons=1)
+            .pattern(CEP_FOLLOWED_BY_ALL, chunked=True, chunk_horizons=1)
             .to_df())
 
 
@@ -974,7 +784,6 @@ def q_cep_one_or_more_bounded(spark: SparkSession,
     one_or_more stays a loud refusal. Property twin:
     test_cep_properties.test_cep_fork_loop_*; streaming convergence:
     test_cep_facade.test_pattern_streaming_fork_loop_converges."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1053,7 +862,6 @@ def q_cep_absence_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     2-stage extraction machine as a recursive CTE and applies the same
     NOT EXISTS band. Streaming stays the 2-stage timer form (the
     chain family refuses on streams, loudly)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1110,7 +918,6 @@ def q_cep_not_between(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage bit), so the hash match pins the veto machine itself.
     Property twin: test_cep_properties.test_cep_veto_*; streaming:
     test_pattern_streaming_not_between."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1183,7 +990,6 @@ def q_cep_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE relation with the predicates in its CASE code
     assignment. Property twin: test_cep_properties.test_cep_where_*;
     streaming: test_pattern_streaming_where_preds."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1233,7 +1039,6 @@ def q_cep_where_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     first outside the horizon is impossible. Streaming twin:
     test_pattern_streaming_where_preds (same pattern on the live
     stream converges to these counts)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1288,7 +1093,6 @@ def q_cep_or_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     condition), so the machine is the plain 2-stage alternation
     automaton — replayed by the oracle's recursive-CTE with the same
     IN ('error','signup') code assignment."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1369,7 +1173,6 @@ def q_cep_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums. Skip-past-last + optional refuses loudly (the branches
     compete for event consumption). Property twin:
     test_cep_optional_union_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1445,7 +1248,6 @@ def q_cep_times_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     promotes the open s1 anchors into s2 and re-seeds s1 with itself —
     the oracle's run3 replays exactly that (s1 := [t], s2 := s2+s1).
     Property twin: test_cep_times_range_union_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1489,7 +1291,6 @@ def q_cep_followed_by_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     triple self-join counting the increasing triples — no automaton
     replay on the DuckDB side at all. Property twin enumerates
     subsequences by brute force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1535,7 +1336,6 @@ def q_cep_followed_by_any_within(spark: SparkSession,
     state is bounded by anchor density inside the horizon while the
     combinatorial partial count lives in the counters. The oracle is
     the independent span-filtered triple join."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1606,7 +1406,6 @@ def q_cep_where_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor_v) carried through the recursive-CTE state. Streaming twin:
     test_pattern_streaming_where_rel; property twin:
     test_cep_where_rel_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1657,7 +1456,6 @@ def q_cep_where_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     match_no is projected away so the hash stays order-insensitive
     (the q_cep_loop_matches convention); the oracle states the
     first-close rule independently as a ranked join."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1726,7 +1524,6 @@ def q_cep_strict_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     (order-insensitive hash); the streaming twin — the KMP stepper
     plus a K-deep ring buffer whose head is the anchor on completion —
     pins numbering in test_pattern_matches_streaming_strict."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1782,7 +1579,6 @@ def q_cep_loop_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     and numbering is an emission-order artifact (the streaming twin
     pins it separately). Streaming:
     test_pattern_matches_streaming_fork_loop."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1853,7 +1649,6 @@ def q_cep_quantified_relaxed(spark: SparkSession, sf_dir: str) -> DataFrame:
     transition, exactly like q_cep_followed_by_within's. Property twin:
     test_cep_relaxed_times_equals_manual_expansion (random sequences,
     quantified == hand-expanded)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -1916,7 +1711,6 @@ def q_cep_mixed_contiguity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match pins the mixed machine itself. Property twins:
     test_cep_mixed_contiguity_* (random sequences vs the Python NFA,
     plain, within-bounded, and forking)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2291,7 +2085,6 @@ def q_cep_skip_to_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first click after the anchor, first in-horizon purchase after
     that click — no automaton replay). Property twin vs brute force:
     test_cep_skip_to_next_matches_brute_force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2335,7 +2128,6 @@ def q_cep_skip_past_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     enumerated candidates as a recursive CTE carrying the interval
     list. Property twin: test_cep_skip_past_last_event_matches_brute_
     force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2413,7 +2205,6 @@ def q_cep_skip_to_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate enumeration + recursive kill-interval replay with
     lo = start+1, hi = first-click − 1. Property twin:
     test_cep_skip_to_first_last_match_brute_force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2452,7 +2243,6 @@ def q_cep_skip_to_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip_to_first's on identical input. Oracle: same recursive
     kill-interval replay with the c2 bound. Property twin:
     test_cep_skip_to_first_last_match_brute_force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2507,7 +2297,6 @@ def q_cep_until(spark: SparkSession, sf_dir: str) -> DataFrame:
     is accepted as a Flink-documented no-op on the final stage.
     Property twin: test_cep_until_matches_brute_force; streaming
     convergence: test_pattern_streaming_until_converges."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2561,7 +2350,6 @@ def q_cep_until_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     match_no is projected away (emission-order artifact; the
     streaming twin pins it). Streaming:
     test_pattern_matches_streaming_until."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2614,7 +2402,6 @@ def q_cep_where_rel_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs/scale.md §CEP. Property twin:
     test_cep_fork_rel_matches_brute_force; streaming convergence:
     test_pattern_streaming_fork_rel_converges."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2661,7 +2448,6 @@ def q_cep_not_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing matched strictly next. K-stage prefixes compose through the
     prefix's match extraction (tested in
     test_cep_not_next_matches_brute_force)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2713,7 +2499,6 @@ def q_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a plain count and a band join — and sums them with a full outer
     join. Streaming refuses loudly. Property twin:
     test_cep_zero_or_more_matches_brute_force."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2786,7 +2571,6 @@ def q_cep_where_prev(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE state. NULL values fail the comparison on both
     engines. Streaming twin: test_pattern_streaming_where_prev;
     property twin: test_cep_where_prev_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2872,7 +2656,6 @@ def q_cep_where_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_cep_where_agg_sum_matches_python_nfa (final stage) and
     test_cep_where_agg_max_mid_stage_matches_python_nfa (mid stage,
     max)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -2934,7 +2717,6 @@ def q_cep_where_prev_fork(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin: test_cep_fork_prev_matches_brute_force (K=3 distinguishes
     prev from anchor; K=2 pinned equal to where_rel); streaming
     convergence: test_pattern_streaming_fork_prev."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3010,7 +2792,6 @@ def q_cep_group_times(spark: SparkSession, sf_dir: str) -> DataFrame:
     refuse loudly. Property twin: test_cep_group_times_matches_python
     _nfa (pure-Python NFA + flat-pattern equivalence under BOTH skip
     strategies); refusal suite: test_group_refusals."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3081,7 +2862,6 @@ def q_cep_loop_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     twins: test_cep_loop_agg_sum_matches_brute_force (K=2) and
     test_cep_loop_agg_count_k3_matches_brute_force; streaming twin:
     test_pattern_streaming_loop_agg."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3137,7 +2917,6 @@ def q_cep_times_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_cep_times_or_more_equals_explicit_composition (n=2 explicit
     composition; n=1 ≡ one_or_more); streaming rides the same eager
     expansion (the fork-loop stepper)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3200,7 +2979,6 @@ def q_cep_consecutive(spark: SparkSession, sf_dir: str) -> DataFrame:
     Property twins: test_cep_consecutive_loop_matches_python_nfa
     (K=2 + K=3 + chunked equivalence); streaming twin:
     test_pattern_streaming_consecutive (+ restart pin)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3259,7 +3037,6 @@ def q_cep_consecutive_matches(spark: SparkSession,
     precedes the FIRST purchase after v. match_no is projected away
     (emission-order artifact; the streaming twin pins it). Streaming:
     test_pattern_matches_streaming_consecutive."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3323,7 +3100,6 @@ def q_cep_allow_combinations(spark: SparkSession,
     test_cep_allow_combinations_matches_subset_enumeration (literal
     itertools subset enumeration) and the K=3 promotion variant;
     streaming twin: test_pattern_streaming_allow_combinations."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3393,7 +3169,6 @@ def q_cep_group_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_pattern_streaming_group_loop. Refusal edges: begin groups
     (no prefix anchor), strict/inner-quantified groups, non-tail
     loops, skip strategies, missing within."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3461,7 +3236,6 @@ def q_cep_group_optional(spark: SparkSession, sf_dir: str) -> DataFrame:
     one repetition, so n = SUM(1 + LEAST(reps, 1)) per user. Property
     twin: test_cep_group_optional_matches_python_nfa; refusal edges in
     test_group_variant_refusals."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3496,7 +3270,6 @@ def q_cep_group_times_range(spark: SparkSession,
     telescopes to SUM(LEAST(reps, 2)) per user — the same recursive
     CTE as q_cep_group_loop with a capped sum. Property twin:
     test_cep_group_times_range_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3527,7 +3300,6 @@ def q_cep_group_zom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: SUM(1 + reps) per user over the same per-anchor
     alternation replay. Property twin:
     test_cep_group_zom_matches_python_nfa."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3610,7 +3382,6 @@ def q_cep_group_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE state. Property twins:
     test_cep_group_nested_matches_flat and
     test_nested_group_refusals."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )
@@ -3696,7 +3467,6 @@ def q_cep_timeouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     contiguity — the strict-kill-is-not-a-timeout pin); streaming
     twin: test_pattern_streaming_timeouts (event-observed expiry +
     watermark timers)."""
-    from flink_tutorial_broadcast_spark.cep import Pattern
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,
     )

@@ -18,6 +18,7 @@ Usage:
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,6 +103,18 @@ def unpartitioned_windows(plan: str) -> list[str]:
     return hits
 
 
+def plan_operators(plan: str) -> set[str]:
+    """Operator names in a physical-plan tree string: the first token of
+    each node line after its tree-drawing prefix and any "*(n) " codegen
+    marker ("== ... ==" section headers are skipped)."""
+    ops: set[str] = set()
+    for line in plan.splitlines():
+        node = re.sub(r"^[\s:+\-]*(\*\(\d+\)\s*)?", "", line)
+        if node and not node.startswith("=="):
+            ops.add(re.split(r"[\s(\[]", node, maxsplit=1)[0])
+    return ops
+
+
 def physical_plan(df: DataFrame) -> str:
     # materialize THIS dataframe's own execution (not .count(), which plans
     # a separate query): under AQE the codegen stages and final join
@@ -129,16 +142,16 @@ def audit_one(name: str, df: DataFrame) -> list[str]:
             flags.append("SortMergeJoin where broadcast expected")
     # codegen stages print as "*(n) Operator" in plan strings; EmptyRelation
     # means AQE proved the result empty at runtime — nothing left to codegen.
-    # LocalTableScan (r13's Arrow local-rows results — q_scan_inline,
-    # q_bpe_merges' learned rules) is a materialized inline relation:
-    # the plan IS the data, so zero codegen is the correct shape, not a
-    # missing span (these two were the only keys flagged once r13's
-    # local_rows sweep landed; GATE_r13 was never stamped, so the stale
-    # rule first fired in the r14 gate).
+    # A plan made ONLY of LocalTableScan/Project (the Arrow local-rows
+    # results — q_scan_inline, q_bpe_merges' learned rules) is a
+    # materialized inline relation: the plan IS the data, so zero codegen
+    # is the correct shape, not a missing span. A LocalTableScan feeding
+    # any other operator gets no exemption.
     if "*(" not in plan and "WholeStageCodegen" not in plan \
             and "EvalPython" not in plan and "InPandas" not in plan \
             and "EmptyRelation" not in plan \
-            and "LocalTableScan" not in plan \
+            and not plan_operators(plan) <= {"LocalTableScan",
+                                             "Project"} \
             and name not in ALLOW["scan_only"]:
         flags.append("no codegen span")
     return flags

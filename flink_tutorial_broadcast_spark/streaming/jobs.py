@@ -26,10 +26,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from flink_tutorial_broadcast_spark.cep import compile_pattern_stream
 from flink_tutorial_broadcast_spark.sources.rules import rules_df
 from flink_tutorial_broadcast_spark.streaming.sources import (
     checkpoint_dir,
     stream_events,
+    two_file_stream,
 )
 
 
@@ -137,27 +139,10 @@ def session_window_stream_snapshots(spark: SparkSession, sf_dir: str,
     """
     from flink_tutorial_broadcast_spark.io import load
 
-    ev_batch = load(spark, sf_dir, "events").select("user_id", "ts")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="sess_update_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-
-    sdf = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-        .withWatermark("ts", "10 minutes")
-    )
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts"),
+        "sess_update_")
+    sdf = sdf.withWatermark("ts", "10 minutes")
     agg = (
         sdf.groupBy(
             F.session_window("ts", f"{gap_minutes} minutes").alias("w"),
@@ -217,32 +202,6 @@ def _count_window_roll(size: int):
     return roll
 
 
-_CEP_STREAM_CODE = {"view": 1, "click": 2, "purchase": 3}
-
-
-def _cep_advance(key, pdf_iter, state):
-    """Keyed-state CEP automaton step (module-level so the streaming
-    twin AND the restart job run the identical machine): state = the
-    NFA's O(1) register (match count, stage)."""
-    import pandas as pd
-
-    cnt, stage = state.get if state.exists else (0, 0)
-    rows = []
-    for pdf in pdf_iter:
-        rows.extend(zip(pdf["ts"].tolist(), pdf["event_id"].tolist(),
-                        [_CEP_STREAM_CODE.get(x, 0)
-                         for x in pdf["event_type"].tolist()]))
-    for _, _, c in sorted(rows):
-        if c == stage + 1:
-            if stage == 2:
-                cnt, stage = cnt + 1, 0
-            else:
-                stage += 1
-    state.update((cnt, stage))
-    yield pd.DataFrame({"user_id": [key[0]], "n_matches": [cnt],
-                        "stage": [stage]})
-
-
 def count_window_stream(spark: SparkSession, sf_dir: str,
                         size: int = 50) -> DataFrame:
     """E4 STREAMING count windows (Flink ``keyBy(...).countWindow(50)``)
@@ -261,30 +220,12 @@ def count_window_stream(spark: SparkSession, sf_dir: str,
     """
     from flink_tutorial_broadcast_spark.io import load
 
-    ev_batch = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "value")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="cntwin_stream_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    sdf = (
-        spark.readStream
-        .schema("user_id long, ts timestamp, event_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-    )
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select(
+            "user_id", "ts", "event_id", "value"),
+        "cntwin_stream_")
     out = sdf.groupBy("user_id").applyInPandasWithState(
         _count_window_roll(size),
         outputStructType=("user_id long, bucket long, n_events long, "
@@ -350,138 +291,53 @@ def side_output_stream(
 
 def cep_followed_by_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_cep_followed_by's STREAMING twin — CEP where Flink actually runs
-    it: the relaxed-contiguity view…click…purchase automaton as KEYED
-    STATE over an unbounded stream. Per user the state is exactly the
-    NFA's O(1) register (match count, stage); each micro-batch folds its
-    events in (ts, event_id) order on top of the carried state and emits
-    the running count (update mode) — the early-fire view of matches as
+    it: the SAME relaxed-contiguity view…click…purchase `Pattern`
+    (sequence_ops.CEP_FOLLOWED_BY) compiled by cep.compile_pattern_stream
+    to its keyed-state stepper. Per user the state is the NFA's O(1)
+    register (match count, stage); each micro-batch folds its events in
+    (ts, event_id) order on top of the carried state and emits the
+    running count (update mode) — the early-fire view of matches as
     they complete, converging to the batch answer once the stream drains
     (test-pinned equality with the oracle-checked q_cep_followed_by).
 
-    The fixture streams as two time-ordered files (median split,
-    strictly increasing mtimes), so the automaton provably SURVIVES the
-    batch boundary: a partial match (stage > 0) carried in state at the
-    split must complete in batch 1 — the continuity a per-batch
-    recomputation would lose.
+    The fixture streams as two time-ordered files (median split), so a
+    partial match open at the split must complete in micro-batch 1 —
+    the continuity a per-batch recomputation would lose.
     """
     from flink_tutorial_broadcast_spark.io import load
-
-    ev_batch = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="cep_stream_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    sdf = (
-        spark.readStream
-        .schema("user_id long, ts timestamp, event_id long, "
-                "event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_EVENTS, CEP_FOLLOWED_BY,
     )
-    out = sdf.groupBy("user_id").applyInPandasWithState(
-        _cep_advance,
-        outputStructType="user_id long, n_matches long, stage long",
-        stateStructType="cnt long, stage long",
-        outputMode="Update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _run_to_memory(out, "update")
 
-
-_CEP_FORK_W_MS = 48 * 3600 * 1000  # the q_cep_followed_by_all horizon
-
-
-def _cep_fork_advance(key, pdf_iter, state):
-    """Forking-NFA step as keyed state: the state IS the open-anchor
-    timestamp arrays per stage (exactly the partial-match set Flink's
-    default NFA keeps, bounded by `within` expiry) plus the completed
-    count — identical machine to the batch q_cep_followed_by_all fold
-    and its recursive-CTE oracle, in milliseconds."""
-    import pandas as pd
-
-    code = {"view": 1, "click": 2, "purchase": 3}
-    cnt, s1, s2 = state.get if state.exists else (0, [], [])
-    s1, s2 = list(s1), list(s2)
-    rows = []
-    for pdf in pdf_iter:
-        rows.extend(zip(
-            (pdf["ts"].to_numpy("datetime64[ns]")
-             .astype("int64") // 1_000_000).tolist(),
-            pdf["event_id"].tolist(),
-            [code.get(x, 0) for x in pdf["event_type"].tolist()]))
-    for t, _, c in sorted(rows):
-        s1 = [a for a in s1 if t - a <= _CEP_FORK_W_MS]
-        s2 = [a for a in s2 if t - a <= _CEP_FORK_W_MS]
-        if c == 1:
-            s1.append(t)
-        elif c == 2:
-            s2, s1 = s2 + s1, []
-        elif c == 3:
-            cnt += len(s2)
-            s2 = []
-    state.update((cnt, s1, s2))
-    yield pd.DataFrame({"user_id": [key[0]], "n_matches": [cnt],
-                        "open_s1": [len(s1)], "open_s2": [len(s2)]})
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select(
+            "user_id", "ts", "event_id", "event_type"),
+        "cep_stream_")
+    out = compile_pattern_stream(CEP_FOLLOWED_BY, sdf, *CEP_EVENTS)
+    return _run_to_memory(out.select("user_id", "n_matches"), "update")
 
 
 def cep_followed_by_all_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q_cep_followed_by_all's STREAMING twin — the FORKING NFA as keyed
     state (Flink's default multi-anchor semantics where it actually
-    runs): per user the state carries the open-anchor timestamp ARRAYS
-    per stage plus the completed count; each micro-batch folds its
-    events in (ts, event_id) order on the carried anchor sets. Same
-    two-time-ordered-file source as the single-anchor twin, so anchors
-    provably SURVIVE the batch boundary: a pending anchor set carried
-    in state at the split completes matches in batch 1 (test-pinned
-    convergence to the oracle-checked batch key + continuity)."""
+    runs): the SAME `Pattern` (sequence_ops.CEP_FOLLOWED_BY_ALL)
+    compiled by cep.compile_pattern_stream, whose state carries the
+    open-anchor timestamp ARRAYS per stage (in microseconds, like the
+    batch fold) plus the completed count. Same two-time-ordered-file
+    source as the single-anchor twin, so pending anchors must survive
+    the micro-batch boundary (test-pinned convergence to the
+    oracle-checked batch key)."""
     from flink_tutorial_broadcast_spark.io import load
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    ev_batch = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id", "event_type")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="cepfork_stream_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-
-    sdf = (
-        spark.readStream
-        .schema("user_id long, ts timestamp, event_id long, "
-                "event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_EVENTS, CEP_FOLLOWED_BY_ALL,
     )
-    out = sdf.groupBy("user_id").applyInPandasWithState(
-        _cep_fork_advance,
-        outputStructType=("user_id long, n_matches long, open_s1 long, "
-                          "open_s2 long"),
-        stateStructType="cnt long, s1 array<long>, s2 array<long>",
-        outputMode="Update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _run_to_memory(out, "update")
+
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select(
+            "user_id", "ts", "event_id", "event_type"),
+        "cepfork_stream_")
+    out = compile_pattern_stream(CEP_FOLLOWED_BY_ALL, sdf, *CEP_EVENTS)
+    return _run_to_memory(out.select("user_id", "n_matches"), "update")
 
 
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -807,7 +663,9 @@ def cep_fork_restart_rocksdb(spark: SparkSession, sf_dir: str):
     the partial-match-SET durability on top of L119's scalar-register
     pins. Returns (run-1 emissions, run-2 emissions)."""
     from flink_tutorial_broadcast_spark.io import load
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_EVENTS, CEP_FOLLOWED_BY_ALL,
+    )
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type")
@@ -815,14 +673,9 @@ def cep_fork_restart_rocksdb(spark: SparkSession, sf_dir: str):
         F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
 
     def make(sdf):
-        return sdf.groupBy("user_id").applyInPandasWithState(
-            _cep_fork_advance,
-            outputStructType=("user_id long, n_matches long, "
-                              "open_s1 long, open_s2 long"),
-            stateStructType="cnt long, s1 array<long>, s2 array<long>",
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return compile_pattern_stream(
+            CEP_FOLLOWED_BY_ALL, sdf, *CEP_EVENTS
+        ).select("user_id", "n_matches")
 
     return _restart_two_halves_rocksdb(
         spark, "user_id long, ts timestamp, event_id long, "
@@ -837,10 +690,12 @@ def cep_followed_by_restart_rocksdb(spark: SparkSession, sf_dir: str):
     durability pin): run 1 advances the per-user NFA register over the
     first time-ordered half, run 2 resumes the same checkpoint on
     RocksDB with the second half — a partial match open at the restart
-    (stage > 0) must complete in run 2, which a recomputation-per-query
-    would lose. Returns (run-1 emissions, run-2 emissions)."""
+    must complete in run 2, which a recomputation-per-query would lose.
+    Returns (run-1 emissions, run-2 emissions)."""
     from flink_tutorial_broadcast_spark.io import load
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_EVENTS, CEP_FOLLOWED_BY,
+    )
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type")
@@ -848,13 +703,9 @@ def cep_followed_by_restart_rocksdb(spark: SparkSession, sf_dir: str):
         F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
 
     def make(sdf):
-        return sdf.groupBy("user_id").applyInPandasWithState(
-            _cep_advance,
-            outputStructType="user_id long, n_matches long, stage long",
-            stateStructType="cnt long, stage long",
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        return compile_pattern_stream(
+            CEP_FOLLOWED_BY, sdf, *CEP_EVENTS
+        ).select("user_id", "n_matches")
 
     return _restart_two_halves_rocksdb(
         spark, "user_id long, ts timestamp, event_id long, "
@@ -1078,20 +929,7 @@ def broadcast_rules_union_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = un.filter(F.col("kind") == "event").agg(
         F.expr("percentile(seq, 0.75)").cast("long").alias("c")
     ).collect()[0]["c"]  # bounded: ONE row
-    d = tempfile.mkdtemp(prefix="rule_union_")
-    (un.filter(F.col("seq") <= F.lit(cut))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (un.filter(F.col("seq") > F.lit(cut))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + i, stamp + i))
-    sdf = (spark.readStream.schema(_RULE_UNION_SCHEMA)
-           .option("recursiveFileLookup", "true")
-           .option("maxFilesPerTrigger", 1)
-           .parquet(d))
+    sdf, d = two_file_stream(spark, un, "rule_union_", col="seq", cut=cut)
     out = _make_rule_matcher_tws(sdf)
     key_conf = "spark.sql.streaming.stateStore.providerClass"
     rocks = ("org.apache.spark.sql.execution.streaming.state."
@@ -1818,20 +1656,11 @@ def tws_event_time_timer_stream(spark: SparkSession, sf_dir: str,
 
     gap_ms = gap_minutes * 60_000
 
-    ev_batch = load(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_id")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="tws_timer_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select(
+            "user_id", "ts", "event_id"),
+        "tws_timer_")
+    sdf = sdf.withWatermark("ts", "0 seconds")
 
     class SessionTimer(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -1870,14 +1699,6 @@ def tws_event_time_timer_stream(spark: SparkSession, sf_dir: str,
         def close(self) -> None:
             pass
 
-    sdf = (
-        spark.readStream.schema("user_id long, ts timestamp, "
-                                "event_id long")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-        .withWatermark("ts", "0 seconds")
-    )
     out = sdf.groupBy("user_id").transformWithStateInPandas(
         SessionTimer(),
         outputStructType="user_id long, n_events long, fired_at long",
@@ -1940,30 +1761,17 @@ def session_close_timer_stream(spark: SparkSession, sf_dir: str,
     micro-batch — the watermark advances between batches, firing timers
     for users idle across the split.
     """
-    import os
-    import tempfile
-
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from flink_tutorial_broadcast_spark.io import load
 
     # two time-ordered files => two micro-batches => watermark movement
-    ev_batch = load(spark, sf_dir, "events").select("user_id", "ts")
-    split_ts = ev_batch.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="timer_demo_")
-    (ev_batch.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev_batch.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    # mtime ordering decides batch order (see incremental_dedup_stream);
-    # make f=0 strictly older so the watermark advances f0 -> f1
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
+    # (f=0 strictly older, so the watermark advances f0 -> f1)
+    sdf, _ = two_file_stream(
+        spark, load(spark, sf_dir, "events").select("user_id", "ts"),
+        "timer_demo_")
+    sdf = sdf.withWatermark("ts", "1 minute")
 
     gap_ms = gap_minutes * 60 * 1000
 
@@ -1988,13 +1796,6 @@ def session_close_timer_stream(spark: SparkSession, sf_dir: str,
         return
         yield  # noqa: unreachable - marks this branch a generator
 
-    sdf = (
-        spark.readStream.schema("user_id long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(d)
-        .withWatermark("ts", "1 minute")
-    )
     closed = sdf.groupBy("user_id").applyInPandasWithState(
         track,
         outputStructType="user_id long, n_events long, session_ms long",

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +68,37 @@ def rate_events(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
         (F.pmod(F.col("value") * 37, F.lit(500)) / F.lit(1.0)).alias("value"),
         F.to_json(F.struct((F.col("value") % 100).alias("k"))).alias("props"),
     )
+
+
+def two_file_stream(spark: SparkSession, df: DataFrame, prefix: str,
+                    col: str = "ts", cut=None) -> tuple[DataFrame, str]:
+    """Replay a batch DataFrame as a TWO-micro-batch file stream: rows
+    with `col` <= `cut` (default: the approximate median of `col`) go
+    to one parquet part-file under `f=0`, the rest to one under `f=1`,
+    whose mtime is 10 s later — the file source orders files by mtime,
+    so with one file per trigger `f=0` is micro-batch 0. The keyed-state
+    twins use it so state (partial matches, buckets, sessions, timers)
+    must carry across the boundary. Returns the stream (read with
+    `df`'s schema) and the directory, which the caller may delete once
+    the query has finished."""
+    if cut is None:
+        cut = df.agg(F.percentile_approx(col, 0.5).alias("m")) \
+            .collect()[0]["m"]
+    d = tempfile.mkdtemp(prefix=prefix)
+    df.filter(F.col(col) <= F.lit(cut)).coalesce(1) \
+        .write.parquet(os.path.join(d, "f=0"))
+    df.filter(F.col(col) > F.lit(cut)).coalesce(1) \
+        .write.parquet(os.path.join(d, "f=1"))
+    stamp = int(time.time())
+    for i, part in enumerate(("f=0", "f=1")):
+        for fname in os.listdir(os.path.join(d, part)):
+            os.utime(os.path.join(d, part, fname),
+                     (stamp + 10 * i, stamp + 10 * i))
+    sdf = (spark.readStream.schema(df.schema)
+           .option("maxFilesPerTrigger", "1")
+           .option("recursiveFileLookup", "true")
+           .parquet(d))
+    return sdf, d
 
 
 def checkpoint_dir() -> str:

@@ -1,12 +1,14 @@
 """The facade's pattern() verb must compile Flink CEP programs to the
-SAME answers as the oracle-backed sequence_ops keys — batch via the
-codegen folds, streaming via the keyed-state NFA twins."""
+SAME answers as the sequence_ops keys and their DuckDB oracles — batch
+via the codegen folds, streaming via the keyed-state NFA twins. The
+keys are themselves Pattern values compiled by cep.py, so a batch
+pattern() run is compared with the key's oracle SQL, never with the
+key."""
 
 from __future__ import annotations
 
 import os
 import tempfile
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,6 +18,7 @@ from flink_tutorial_broadcast_spark.datastream import (
     StreamExecutionEnvironment,
 )
 from flink_tutorial_broadcast_spark.io import load
+from flink_tutorial_broadcast_spark.streaming.sources import two_file_stream
 from tests.conftest import SF_SMOKE
 
 
@@ -23,32 +26,40 @@ def _env(spark):
     return StreamExecutionEnvironment.get_execution_environment(spark)
 
 
-def test_pattern_strict_times_matches_oracle_key(spark, queries):
+def _oracle_rows(duck, key):
+    """The key's DuckDB oracle SQL run on SF_SMOKE, as rows with
+    attribute access."""
+    import __spark_entry__
+    sql = __spark_entry__.oracle_sql()[key]
+    return list(duck.execute(sql).df().itertuples(index=False))
+
+
+def test_pattern_strict_times_matches_oracle_key(spark, duck):
     """begin(v).next(c).times(2).next(p) == q_cep_times (regex path)."""
     pat = (Pattern.begin("v", "view")
            .next("c", "click").times(2)
            .next("p", "purchase"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_times"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_times")
     assert {(r.user_id, r.n_matches) for r in got} \
         == {(r.user_id, r.n_matches) for r in want}
     assert got  # non-vacuous
 
 
-def test_pattern_strict_one_or_more_matches_oracle_key(spark, queries):
+def test_pattern_strict_one_or_more_matches_oracle_key(spark, duck):
     """begin(v).next(c).one_or_more().next(p) == q_cep_one_or_more."""
     pat = (Pattern.begin("v", "view")
            .next("c", "click").one_or_more()
            .next("p", "purchase"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_one_or_more"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_one_or_more")
     assert {(r.user_id, r.n_matches) for r in got} \
         == {(r.user_id, r.n_matches) for r in want}
 
 
-def test_pattern_relaxed_matches_oracle_key(spark, queries):
+def test_pattern_relaxed_matches_oracle_key(spark, duck):
     """begin(v).followed_by(c).followed_by(p) under the default
     skip-past-last == q_cep_followed_by (K-stage machine fold)."""
     pat = (Pattern.begin("v", "view")
@@ -56,12 +67,12 @@ def test_pattern_relaxed_matches_oracle_key(spark, queries):
            .followed_by("p", "purchase"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_followed_by"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_followed_by")
     assert {(r.user_id, r.n_matches) for r in got} \
         == {(r.user_id, r.n_matches) for r in want}
 
 
-def test_pattern_forking_within_matches_oracle_key(spark, queries):
+def test_pattern_forking_within_matches_oracle_key(spark, duck):
     """no_skip() + within(48 hours) == q_cep_followed_by_all (the
     forking anchor-set NFA, Flink's default skip strategy)."""
     pat = (Pattern.begin("v", "view")
@@ -70,12 +81,12 @@ def test_pattern_forking_within_matches_oracle_key(spark, queries):
            .within("48 hours").no_skip())
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_followed_by_all"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_followed_by_all")
     assert {(r.user_id, r.n_matches) for r in got} \
         == {(r.user_id, r.n_matches) for r in want}
 
 
-def test_pattern_absence_matches_oracle_key(spark, queries):
+def test_pattern_absence_matches_oracle_key(spark, duck):
     """begin(v).not_followed_by(p).within(12 hours) ==
     q_cep_not_followed_by (anti-join path, anchors returned)."""
     pat = (Pattern.begin("v", "view")
@@ -83,7 +94,7 @@ def test_pattern_absence_matches_oracle_key(spark, queries):
            .within("12 hours"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_not_followed_by"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_not_followed_by")
     assert {(r.user_id, r.anchor_id) for r in got} \
         == {(r.user_id, r.view_id) for r in want}
 
@@ -127,29 +138,10 @@ def test_pattern_rejects_uncompilable_combinations(spark):
 
 def _two_file_stream(spark, cols):
     """The streaming twins' source shape: the events fixture split at
-    the median ts into two files with strictly increasing mtimes, read
-    one file per micro-batch — partial matches must cross the
-    boundary."""
+    the median ts into two files, read one file per micro-batch —
+    partial matches must cross the boundary."""
     ev = load(spark, SF_SMOKE, "events").select(*cols)
-    split_ts = ev.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="cep_facade_stream_")
-    (ev.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-    types = {"user_id": "long", "ts": "timestamp", "event_id": "long",
-             "event_type": "string", "value": "double"}
-    return (spark.readStream
-            .schema(", ".join(f"{c} {types[c]}" for c in cols))
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(d))
+    return two_file_stream(spark, ev, "cep_facade_stream_")[0]
 
 
 def test_pattern_streaming_relaxed_converges_to_batch(spark, queries):
@@ -202,7 +194,7 @@ def test_pattern_streaming_forking_converges_to_batch(spark, queries):
     assert {u: n for u, n in final.items() if n > 0} == want
 
 
-def test_pattern_relaxed_within_matches_oracle_key(spark, queries):
+def test_pattern_relaxed_within_matches_oracle_key(spark, duck):
     """followed_by chain + within(48 hours) under the default
     skip-past-last == q_cep_followed_by_within (the bounded
     single-anchor machine, generalized in cep.py)."""
@@ -212,14 +204,14 @@ def test_pattern_relaxed_within_matches_oracle_key(spark, queries):
            .within("48 hours"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern(pat).to_df().collect())
-    want = queries["q_cep_followed_by_within"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_followed_by_within")
     assert {(r.user_id, r.n_matches) for r in got} \
         == {(r.user_id, r.n_matches) for r in want}
     assert got
 
 
 def test_pattern_streaming_relaxed_within_converges_to_batch(
-        spark, queries):
+        spark, duck):
     """Streaming bounded single-anchor machine: converged counts equal
     the oracle-backed q_cep_followed_by_within, with the anchor
     timestamp carried across the micro-batch boundary in state."""
@@ -240,13 +232,12 @@ def test_pattern_streaming_relaxed_within_converges_to_batch(
     for r in rows:
         final[r["user_id"]] = max(final.get(r["user_id"], 0),
                                   r["n_matches"])
-    want = {r["user_id"]: r["n_matches"] for r in
-            queries["q_cep_followed_by_within"](spark, SF_SMOKE)
-            .collect()}
+    want = {r.user_id: r.n_matches for r in
+            _oracle_rows(duck, "q_cep_followed_by_within")}
     assert {u: n for u, n in final.items() if n > 0} == want
 
 
-def test_pattern_matches_bindings_equal_oracle_key(spark, queries):
+def test_pattern_matches_bindings_equal_oracle_key(spark, duck):
     """pattern_matches() == q_cep_match_measures: the full per-match
     bindings (match number, anchor id, closing id, span) from the
     facade-compiled fold equal the oracle-checked key's."""
@@ -255,7 +246,7 @@ def test_pattern_matches_bindings_equal_oracle_key(spark, queries):
            .followed_by("p", "purchase"))
     got = (_env(spark).from_dataframe(load(spark, SF_SMOKE, "events"))
            .key_by("user_id").pattern_matches(pat).to_df().collect())
-    want = queries["q_cep_match_measures"](spark, SF_SMOKE).collect()
+    want = _oracle_rows(duck, "q_cep_match_measures")
     key = lambda r: (r.user_id, r.match_no, r.start_event_id,
                      r.end_event_id, r.span_us)
     assert {key(r) for r in got} == {key(r) for r in want}

@@ -1783,7 +1783,7 @@ def test_cep_where_prev_times_matches_python_nfa(spark, rows):
     assert got == {u: n for u, n in want.items() if n > 0}
 
 
-def test_cep_where_prev_times_streaming_converges(spark, tmp_path):
+def test_cep_where_prev_times_streaming_converges(spark):
     """The streaming relaxed-rel stepper shares _expanded(), so the
     rel_src fix must hold there too: converged per-key count == batch,
     with a partial match crossing the micro-batch boundary."""
@@ -1802,29 +1802,15 @@ def test_cep_where_prev_times_streaming_converges(spark, tmp_path):
     batch = _run(spark, df, pat)
     assert batch == {0: 1}
 
-    import os
-    import time
-
     from flink_tutorial_broadcast_spark.cep import compile_pattern_stream
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         _run_to_memory,
     )
-    d = str(tmp_path / "prev_times_stream")
-    half = BASE + dt.timedelta(minutes=400)
-    df.filter(F.col("ts") <= F.lit(half)).coalesce(1) \
-        .write.parquet(os.path.join(d, "f=0"))
-    df.filter(F.col("ts") > F.lit(half)).coalesce(1) \
-        .write.parquet(os.path.join(d, "f=1"))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-    sdf = (spark.readStream
-           .schema("user_id int, ts timestamp, event_id long, "
-                   "event_type string, value double")
-           .option("maxFilesPerTrigger", "1")
-           .option("recursiveFileLookup", "true").parquet(d))
+    from flink_tutorial_broadcast_spark.streaming.sources import (
+        two_file_stream,
+    )
+    sdf, _ = two_file_stream(spark, df, "prev_times_stream_",
+                             cut=BASE + dt.timedelta(minutes=400))
     out = compile_pattern_stream(pat, sdf, ["user_id"], "ts",
                                  "event_id", "event_type")
     last: dict[int, int] = {}

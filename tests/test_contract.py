@@ -204,6 +204,25 @@ def test_unpartitioned_window_detector():
     assert not unpartitioned_windows("WindowGroupLimit [a], [b ASC]")
 
 
+def test_plan_operators_reads_node_names():
+    """The no-codegen exemption keys on plan_operators(): a plan of only
+    LocalTableScan/Project is inline data; a LocalTableScan under any
+    other operator must still show up as that operator."""
+    from flink_tutorial_broadcast_spark.plans.audit import plan_operators
+    assert plan_operators(
+        "Project [a#0]\n+- LocalTableScan [a#0, b#1]") \
+        == {"Project", "LocalTableScan"}
+    assert plan_operators(
+        "AdaptiveSparkPlan isFinalPlan=true\n"
+        "+- == Final Plan ==\n"
+        "   *(2) HashAggregate(keys=[a#0], functions=[])\n"
+        "   :  +- *(1) Filter (a#0 > 1)\n"
+        "   +- Generate explode(xs#1), [a#0], false, [x#2]\n"
+        "      +- LocalTableScan [a#0, xs#1]") \
+        == {"AdaptiveSparkPlan", "HashAggregate", "Filter", "Generate",
+            "LocalTableScan"}
+
+
 def test_global_order_family_has_no_unpartitioned_window(spark, queries):
     """The two-phase rewrites (VERDICT r2 items 3/4/6 + ADVICE vocab
     top-k) must keep their scale-safe plans: no unpartitioned ordered

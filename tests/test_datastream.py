@@ -863,13 +863,14 @@ def test_facade_async_io_runs_on_streaming_input(spark):
     accumulated append output must equal the batch key exactly (no row
     lost, duplicated, or mis-joined across micro-batches), and the
     ordered + on_timeout path must emit substitute records in-stream."""
-    import os
-    import tempfile
     import time as _time
 
     from flink_tutorial_broadcast_spark.io import load
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         _run_to_memory,
+    )
+    from flink_tutorial_broadcast_spark.streaming.sources import (
+        two_file_stream,
     )
     from tests.conftest import SF_SMOKE
 
@@ -880,24 +881,8 @@ def test_facade_async_io_runs_on_streaming_input(spark):
     ev = (load(spark, SF_SMOKE, "events")
           .filter(F.col("event_id") < 2000)
           .select("ts", "event_id", "event_type"))
-    split_ts = ev.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="async_stream_")
-    (ev.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(_time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-    sdf = (spark.readStream
-           .schema("ts timestamp, event_id long, event_type string")
-           .option("maxFilesPerTrigger", "1")
-           .option("recursiveFileLookup", "true")
-           .parquet(d)
-           .select("event_id", "event_type"))
+    sdf, d = two_file_stream(spark, ev, "async_stream_")
+    sdf = sdf.select("event_id", "event_type")
 
     env = StreamExecutionEnvironment.get_execution_environment(spark)
     out = (env.from_dataframe(sdf)

@@ -18,6 +18,30 @@ def _kv(df, keys, val):
     return {tuple(r[k] for k in keys): r[val] for r in df.collect()}
 
 
+def _half_split_counts(spark, pat):
+    """Per-user batch match counts of `pat`, computed on each half of
+    the median-ts split the two-file and restart CEP jobs stream, and
+    summed. A converged streaming count ABOVE this sum can only come
+    from matches that span the split — state carried across it."""
+    from flink_tutorial_broadcast_spark.cep import compile_pattern
+    from flink_tutorial_broadcast_spark.io import load
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_EVENTS,
+    )
+
+    ev = load(spark, SF_SMOKE, "events").select(
+        "user_id", "ts", "event_id", "event_type")
+    split_ts = ev.agg(
+        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
+    total: dict[int, int] = {}
+    for half in (ev.filter(F.col("ts") <= F.lit(split_ts)),
+                 ev.filter(F.col("ts") > F.lit(split_ts))):
+        for r in compile_pattern(pat, half, *CEP_EVENTS).collect():
+            total[r["user_id"]] = total.get(r["user_id"], 0) \
+                + r["n_matches"]
+    return total
+
+
 def test_streaming_tumbling_equals_batch(spark, queries):
     batch = queries["q_window_tumbling"](spark, SF_SMOKE)
     stream = jobs.tumbling_window_stream(spark, SF_SMOKE)
@@ -192,9 +216,13 @@ def test_side_outputs_partition_the_stream_exactly(spark):
 def test_cep_stream_converges_to_batch_and_survives_split(spark, queries):
     """Streaming CEP (keyed-state automaton): the last emission per user
     must equal the oracle-checked batch q_cep_followed_by, and at least
-    one user must CROSS the batch boundary mid-match (batch-0 emission
-    with stage > 0 whose final count grew) — proving the NFA register
-    really is carried in state, not recomputed per batch."""
+    one user's converged count must EXCEED the sum of the batch counts
+    on the two halves of the split — a match completed across the
+    micro-batch boundary, proving the NFA register really is carried in
+    state, not recomputed per batch."""
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_FOLLOWED_BY,
+    )
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         cep_followed_by_stream,
     )
@@ -202,45 +230,79 @@ def test_cep_stream_converges_to_batch_and_survives_split(spark, queries):
     # memory-sink rows arrive per batch; the LAST emission per user is
     # the converged automaton (counts are monotone -> max)
     final: dict[int, int] = {}
-    first_emission: dict[int, tuple[int, int]] = {}
     for r in rows:
         uid = r["user_id"]
-        if uid not in first_emission:
-            first_emission[uid] = (r["n_matches"], r["stage"])
         final[uid] = max(final.get(uid, 0), r["n_matches"])
     batch = {r["user_id"]: r["n_matches"] for r in
              queries["q_cep_followed_by"](spark, SF_SMOKE).collect()}
     assert {u: n for u, n in final.items() if n > 0} == batch
-    crossed = [u for u, (n0, st0) in first_emission.items()
-               if st0 > 0 and final[u] > n0]
+    halves = _half_split_counts(spark, CEP_FOLLOWED_BY)
+    crossed = [u for u, n in final.items() if n > halves.get(u, 0)]
     assert crossed  # some partial match completed across the boundary
 
 
 def test_cep_fork_stream_converges_and_carries_anchor_sets(spark, queries):
     """Streaming forking NFA (anchor-set keyed state): the last emission
     per user must equal the oracle-checked batch q_cep_followed_by_all,
-    and at least one user must cross the batch boundary with OPEN
-    anchors (batch-0 emission with open_s1 + open_s2 > 0 whose final
-    count grew) — proving the partial-match SET is carried in state."""
+    and at least one user's converged count must EXCEED the sum of the
+    batch counts on the two halves of the split — open anchors that
+    completed matches across the boundary, proving the partial-match
+    SET is carried in state."""
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_FOLLOWED_BY_ALL,
+    )
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         cep_followed_by_all_stream,
     )
 
     rows = cep_followed_by_all_stream(spark, SF_SMOKE).collect()
     final: dict[int, int] = {}
-    first_emission: dict[int, tuple[int, int]] = {}
     for r in rows:
         uid = r["user_id"]
-        if uid not in first_emission:
-            first_emission[uid] = (r["n_matches"],
-                                   r["open_s1"] + r["open_s2"])
         final[uid] = max(final.get(uid, 0), r["n_matches"])
     batch = {r["user_id"]: r["n_matches"] for r in
              queries["q_cep_followed_by_all"](spark, SF_SMOKE).collect()}
     assert {u: n for u, n in final.items() if n > 0} == batch
-    crossed = [u for u, (n0, open0) in first_emission.items()
-               if open0 > 0 and final[u] > n0]
+    halves = _half_split_counts(spark, CEP_FOLLOWED_BY_ALL)
+    crossed = [u for u, n in final.items() if n > halves.get(u, 0)]
     assert crossed  # open anchors completed matches across the boundary
+
+
+def test_cep_fork_stream_compares_horizon_in_microseconds(spark, tmp_path):
+    """The streaming forking NFA tests its 48 h horizon in MICROSECONDS,
+    like the batch q_cep_followed_by_all: a view at +900 us and a
+    purchase at +48 h +950 us are 48 h + 50 us apart — outside the
+    horizon — although both floor to the same millisecond offset, 48 h
+    exactly. Neither the stream nor the batch key may count a match."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        q_cep_followed_by_all,
+    )
+    from flink_tutorial_broadcast_spark.streaming.jobs import (
+        cep_followed_by_all_stream,
+    )
+
+    base = datetime.datetime(2024, 1, 1)  # a whole second
+    us = datetime.timedelta(microseconds=1)
+    offsets = [900 * us, datetime.timedelta(hours=1),
+               datetime.timedelta(hours=48) + 950 * us]
+    pq.write_table(pa.table({
+        "event_id": pa.array([1, 2, 3], pa.int64()),
+        "user_id": pa.array([7, 7, 7], pa.int64()),
+        "ts": pa.array([base + o for o in offsets],
+                       pa.timestamp("us")),
+        "event_type": pa.array(["view", "click", "purchase"]),
+        "value": pa.array([1.0, 1.0, 1.0]),
+        "props": pa.array(["{}"] * 3),
+    }), str(tmp_path / "events.parquet"))
+
+    rows = cep_followed_by_all_stream(spark, str(tmp_path)).collect()
+    assert max((r["n_matches"] for r in rows), default=0) == 0
+    assert q_cep_followed_by_all(spark, str(tmp_path)).count() == 0
 
 
 def test_eventlog_stream_per_partition_offsets_and_resume(spark):
@@ -701,46 +763,48 @@ def test_count_window_restart_rocksdb(spark, queries):
 def test_cep_restart_rocksdb_completes_partial_match(spark, queries):
     """The CEP NFA register survives a query RESTART on RocksDB: run-2
     final counts equal the oracle-checked batch q_cep_followed_by, and
-    at least one user whose register was mid-match at the restart
-    (stage > 0 in run 1's last emission) completed that match in run 2
-    — continuity a per-query recomputation would lose."""
+    at least one user's final count EXCEEDS the sum of the batch counts
+    on the two halves — a match open at the restart completed in run 2,
+    continuity a per-query recomputation would lose."""
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_FOLLOWED_BY,
+    )
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         cep_followed_by_restart_rocksdb,
     )
 
     r1, r2 = cep_followed_by_restart_rocksdb(spark, SF_SMOKE)
-    r1_final = {r["user_id"]: (r["n_matches"], r["stage"])
-                for r in r1.collect()}
-    final = {u: n for u, (n, _) in r1_final.items()}
+    final = {r["user_id"]: r["n_matches"] for r in r1.collect()}
     final.update({r["user_id"]: r["n_matches"] for r in r2.collect()})
     batch = {r["user_id"]: r["n_matches"] for r in
              queries["q_cep_followed_by"](spark, SF_SMOKE).collect()}
     assert {u: n for u, n in final.items() if n > 0} == batch
-    carried = [u for u, (n, st) in r1_final.items()
-               if st > 0 and final[u] > n]
+    halves = _half_split_counts(spark, CEP_FOLLOWED_BY)
+    carried = [u for u, n in final.items() if n > halves.get(u, 0)]
     assert carried, "no partial match crossed the restart"
 
 
 def test_cep_fork_restart_rocksdb_reloads_anchor_sets(spark, queries):
     """The forking NFA's ARRAY-typed anchor-set state survives a query
     restart on RocksDB: run-2 final counts equal the batch oracle, and
-    at least one user with open anchors at the end of run 1 completed
-    matches in run 2 — set-valued state reloaded, not recomputed."""
+    at least one user's final count EXCEEDS the sum of the batch counts
+    on the two halves — anchors open at the restart completed matches
+    in run 2, set-valued state reloaded, not recomputed."""
+    from flink_tutorial_broadcast_spark.operators.sequence_ops import (
+        CEP_FOLLOWED_BY_ALL,
+    )
     from flink_tutorial_broadcast_spark.streaming.jobs import (
         cep_fork_restart_rocksdb,
     )
 
     r1, r2 = cep_fork_restart_rocksdb(spark, SF_SMOKE)
-    r1_final = {r["user_id"]: (r["n_matches"],
-                               r["open_s1"] + r["open_s2"])
-                for r in r1.collect()}
-    final = {u: n for u, (n, _) in r1_final.items()}
+    final = {r["user_id"]: r["n_matches"] for r in r1.collect()}
     final.update({r["user_id"]: r["n_matches"] for r in r2.collect()})
     batch = {r["user_id"]: r["n_matches"] for r in
              queries["q_cep_followed_by_all"](spark, SF_SMOKE).collect()}
     assert {u: n for u, n in final.items() if n > 0} == batch
-    carried = [u for u, (n, open_) in r1_final.items()
-               if open_ > 0 and final[u] > n]
+    halves = _half_split_counts(spark, CEP_FOLLOWED_BY_ALL)
+    carried = [u for u, n in final.items() if n > halves.get(u, 0)]
     assert carried, "no anchor set crossed the restart"
 
 

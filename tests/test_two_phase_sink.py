@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import os
 import tempfile
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,6 +14,7 @@ from pyspark.sql import functions as F
 from flink_tutorial_broadcast_spark.io import load
 from flink_tutorial_broadcast_spark.streaming.sources import (
     checkpoint_dir,
+    two_file_stream,
 )
 from flink_tutorial_broadcast_spark.streaming.two_phase_sink import (
     TwoPhaseCommitFileSink,
@@ -28,25 +28,7 @@ def _two_batch_source(spark):
     """events fixture split at the median ts into two files, one
     micro-batch each (strictly increasing mtimes)."""
     ev = load(spark, SF_SMOKE, "events").select("ts", *COLS)
-    split_ts = ev.agg(
-        F.percentile_approx("ts", 0.5).alias("m")).collect()[0]["m"]
-    d = tempfile.mkdtemp(prefix="tpc_src_")
-    (ev.filter(F.col("ts") <= F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=0")))
-    (ev.filter(F.col("ts") > F.lit(split_ts))
-     .coalesce(1).write.parquet(os.path.join(d, "f=1")))
-    stamp = int(time.time())
-    for i, part in enumerate(("f=0", "f=1")):
-        for fname in os.listdir(os.path.join(d, part)):
-            os.utime(os.path.join(d, part, fname),
-                     (stamp + 10 * i, stamp + 10 * i))
-    schema = ("ts timestamp, event_id long, user_id long, "
-              "event_type string, value double")
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("recursiveFileLookup", "true")
-            .parquet(d)
-            .select(*COLS)), ev
+    return two_file_stream(spark, ev, "tpc_src_")[0].select(*COLS), ev
 
 
 def test_two_phase_commit_sink_crash_between_phases(spark):

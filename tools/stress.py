@@ -716,7 +716,7 @@ def s_cep_stepper_throughput(c: Ctx) -> None:
                 [1, 2, 4], W, key_cols=["user_id"]), masked),
             # r12: the group-loop back-edge (view -> (click purchase)+)
             # and the allowCombinations subsequence-register loop. The
-            # combos horizon is 5 MINUTES, not 48 h: registers double
+            # combos horizon is 60 SECONDS, not 48 h: registers double
             # per close (2^m subsequences is the verb's definition) and
             # the r13 density-fault guard (correctly) refuses any run
             # whose in-horizon close count crosses 62 doublings — at
