@@ -19,7 +19,7 @@ independently:
 
 - strict `next` chains (with `times(n)` / `one_or_more()` quantifiers,
   including on the BEGIN stage) → one per-key path of single-char stage
-  codes + regex count, all codegen, one shuffle (q_sequence_pattern,
+  codes + regex count, all in the JVM, one shuffle (q_sequence_pattern,
   q_cep_times, q_cep_one_or_more). Event types map to code chars BEFORE
   the regex is built, so types that are substrings of each other
   ('click' in 'doubleclick') or contain regex metacharacters can never
@@ -103,6 +103,7 @@ from __future__ import annotations
 
 import bisect
 from dataclasses import dataclass, field, replace
+from types import SimpleNamespace
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -289,12 +290,15 @@ class Pattern:
         p._grp = (0, len(block))
         return p
 
-    def followed_by_group(self, sub: "Pattern") -> "Pattern":
-        """Relaxed-contiguity GROUP [FLINK-API:
-        Pattern#followedBy(Pattern)]."""
+    def _refuse_after_not_next(self) -> None:
         if self.stages and self.stages[-1].contiguity == "not_next":
             raise NotImplementedError(
                 "not_next() is terminal — no stages may follow it")
+
+    def followed_by_group(self, sub: "Pattern") -> "Pattern":
+        """Relaxed-contiguity GROUP [FLINK-API:
+        Pattern#followedBy(Pattern)]."""
+        self._refuse_after_not_next()
         block = self._group_block(sub, "followed_by")
         lo = len(self.stages)
         self.stages.extend(block)
@@ -305,9 +309,7 @@ class Pattern:
         """Strict-contiguity GROUP [FLINK-API: Pattern#next(Pattern)]:
         the group's FIRST stage is strict against the previous match;
         inner stages keep their own contiguity."""
-        if self.stages and self.stages[-1].contiguity == "not_next":
-            raise NotImplementedError(
-                "not_next() is terminal — no stages may follow it")
+        self._refuse_after_not_next()
         block = self._group_block(sub, "next")
         lo = len(self.stages)
         self.stages.extend(block)
@@ -318,9 +320,7 @@ class Pattern:
         # not_followed_by may appear MID-pattern (r9): it compiles as a
         # VETO on the next await (_veto_codes validates the shape);
         # only the FINAL-stage form is the timer/anti-join absence
-        if self.stages and self.stages[-1].contiguity == "not_next":
-            raise NotImplementedError(
-                "not_next() is terminal — no stages may follow it")
+        self._refuse_after_not_next()
         self._grp = None  # a new stage closes any pending group
         self.stages.append(_Stage(name, event_type, contiguity))
         return self
@@ -1090,11 +1090,7 @@ class Pattern:
                     "followed_by prefixes only")
             return "absence_next"
         if self.stages[-1].contiguity == "not_followed_by":
-            last = self.stages[-1]
-            if last.times or last.one_or_more:
-                raise NotImplementedError(
-                    "quantified not_followed_by is not compiled (a "
-                    "single intervening event already kills the run)")
+            _refuse_quantified_nfb(self.stages[-1])
             if self.within_us is None:
                 raise ValueError(
                     "not_followed_by needs within(): absence over an "
@@ -1290,9 +1286,8 @@ def _gvar_variants(pat: Pattern) -> list[Pattern]:
     its fixed variant patterns: one per copy count k in [a, b] (k=0 =
     the prefix alone), relaxed contiguity between copies — binding
     shapes are disjoint, so the variant-union fold (batch) and the
-    variant-union stepper (streaming, r13) both sum exactly. Shared
-    by compile_pattern's group_variants branch and
-    compile_pattern_stream."""
+    variant-union stepper (streaming, r13) both sum exactly. Batch
+    and streaming reach it through _union_variants."""
     lo, hi, a, b = pat._gvar
     if b - a + 1 > _MAX_VARIANTS:
         raise NotImplementedError(
@@ -1313,32 +1308,6 @@ def _gvar_variants(pat: Pattern) -> list[Pattern]:
                                     within_us=pat.within_us,
                                     skip=pat.skip))
     return variants
-
-
-def _compile_variant_union(pat: Pattern, df: DataFrame,
-                           keys: list[str], time_col: str,
-                           tiebreak_col: str,
-                           event_col: str) -> DataFrame:
-    """Batch compile for optional()/times(a, b) patterns: one fork-
-    machine fold PER VARIANT, all folds sharing ONE per-key collected
-    sequence (one shuffle, one buffer — the variant count multiplies
-    only the in-memory fold, not the scan or the shuffle), summed per
-    key. A 1-stage variant's count is simply the number of events
-    satisfying its condition (every such event is its own match)."""
-    if pat.skip != "no_skip":
-        raise NotImplementedError(
-            "optional()/times(a, b) compile only under no_skip(): "
-            "Flink's NFA keeps both quantifier branches as distinct "
-            "matches there; under skip-past-last the branches compete "
-            "for event consumption — drop the quantifier or call "
-            "no_skip()")
-    if any(s.contiguity == "not_followed_by" for s in pat.stages):
-        raise NotImplementedError(
-            "optional()/times(a, b) with not_followed_by stages is "
-            "not compiled — split the absence check out")
-    variants = _variants(pat)
-    return _variant_union_fold(pat, variants, df, keys, time_col,
-                               tiebreak_col, event_col)
 
 
 def _variant_union_fold(pat: Pattern, variants: list[Pattern],
@@ -1414,135 +1383,258 @@ def _variant_union_fold(pat: Pattern, variants: list[Pattern],
             .filter(F.col("n_matches") > 0))
 
 
+def _variant_union_gates(pat: Pattern) -> None:
+    """Stage optional()/times(a, b) compiles as a union of variants on
+    the forking machines: no_skip() only, and no run payloads or
+    absence stages. Batch and streaming share these refusals."""
+    if pat._has_rel() or pat._has_agg():
+        raise NotImplementedError(
+            "where_rel()/where_agg() with optional()/times(a, b) "
+            "is not compiled — the variant union runs on the "
+            "forking machines, which carry no per-anchor payloads")
+    if pat.skip != "no_skip":
+        raise NotImplementedError(
+            "optional()/times(a, b) compile only under no_skip(): "
+            "Flink's NFA keeps both quantifier branches as distinct "
+            "matches there; under skip-past-last the branches compete "
+            "for event consumption — drop the quantifier or call "
+            "no_skip()")
+    if any(s.contiguity == "not_followed_by" for s in pat.stages):
+        raise NotImplementedError(
+            "optional()/times(a, b) with not_followed_by stages is "
+            "not compiled — split the absence check out")
+
+
+def _union_variants(pat: Pattern) -> list[Pattern] | None:
+    """The FIXED variant patterns whose noSkip counts sum to `pat`'s —
+    stage optional()/times(a, b) (_variants) or a group range
+    (_gvar_variants) — or None when `pat` has neither. Batch folds the
+    variants over one collected sequence (_variant_union_fold);
+    streaming steps them side by side (variant_union_stepper)."""
+    if pat._has_opt_range():
+        _variant_union_gates(pat)
+        return _variants(pat)
+    if getattr(pat, "_gvar", None) is not None:
+        pat._family()   # the shared group gates (tail/no_skip/...)
+        return _gvar_variants(pat)
+    return None
+
+
+def _zom_loop(pat: Pattern) -> Pattern | None:
+    """zeroOrMore — `one_or_more().optional()` on the final stage
+    [FLINK-API: Pattern#oneOrMore#optional] (r10): the match set
+    partitions by loop length — length 0 is exactly the PREFIX
+    pattern's match set (every completed prefix is its own match;
+    for a 2-stage pattern that is simply every anchor-condition
+    event), length >= 1 is exactly the bounded fork-loop's count —
+    so the per-key counts ADD. Returns the loop addend's pattern (the
+    loop side's own gates — within + no_skip, final stage — and
+    until() flow through it unchanged), or None when `pat` is not
+    zeroOrMore. Batch sums the two compiled addends
+    (_prefix_plus_loop); streaming runs both machines side by side in
+    one keyed state row (zero_or_more_stepper — the partition
+    argument is order-free)."""
+    if not (pat.stages and pat.stages[-1].one_or_more
+            and pat.stages[-1].optional):
+        return None
+    if pat._has_rel() or pat._has_agg():
+        raise NotImplementedError(
+            "where_rel()/where_agg() with zeroOrMore is not compiled")
+    if len(pat.stages) < 2:
+        raise NotImplementedError(
+            "zeroOrMore as the only stage is not compiled (every "
+            "position would hold an empty match) — anchor it with a "
+            "prefix stage")
+    if any(s.optional or s.times_hi is not None
+           for s in pat.stages[:-1]):
+        # r11 (advice fix): clearing optional over ALL stages made a
+        # mid-pattern optional() required on the loop addend while the
+        # prefix addend kept it optional — undercounting loop-length
+        # >= 1 matches that skip the optional stage. The loop side
+        # (fork-loop machine) carries no variant union, so refuse.
+        raise NotImplementedError(
+            "zeroOrMore with a non-final optional()/times(a, b) stage "
+            "is not compiled (the loop addend runs on the fork-loop "
+            "machine, which carries fixed stages) — drop the "
+            "mid-pattern quantifier or split the pattern")
+    return Pattern(
+        stages=(list(pat.stages[:-1])
+                + [replace(pat.stages[-1], optional=False)]),
+        within_us=pat.within_us, skip=pat.skip)
+
+
+def _payload_machine(pat: Pattern, fam: str) -> str | None:
+    """Route run-payload conditions (where_rel()/where_prev()/
+    where_agg()) to the machine family that carries them — 'loop_agg'
+    (where_agg on the bounded loop stage), 'fork_rel' (per-anchor
+    payloads under no_skip()) or 'relaxed_rel' (the single-anchor
+    skip-past-last machines) — or None when `pat` has none. Every
+    other combination refuses here, for batch and streaming alike."""
+    if not (pat._has_rel() or pat._has_agg()):
+        return None
+    if pat._has_agg() and fam == "fork_loop":
+        # r11: the Flink-docs canonical loop condition — where_agg on
+        # the final one_or_more stage, per-run registers in the parked
+        # set (aggregate scope = the LOOP's own events)
+        if pat._has_rel() or any(
+                s.agg is not None for s in pat.stages[:-1]):
+            raise NotImplementedError(
+                "loop patterns carry where_agg() on the LOOP "
+                "stage only (aggregate over the loop's accepted "
+                "events) — where_rel()/prefix-stage aggregates "
+                "would need per-run whole-run payloads")
+        if len(pat.stages) < 2:
+            raise NotImplementedError(
+                "where_agg() on a 1-stage loop is not compiled — "
+                "anchor it with a prefix stage")
+        if pat.stages[-1].consec:
+            raise NotImplementedError(
+                "consecutive() with where_agg() on the loop is "
+                "not compiled — the strict-internal kill rule is "
+                "carried by the plain loop (drop where_agg) and "
+                "the run-aggregate by the relaxed loop (drop "
+                "consecutive)")
+        if pat.stages[-1].combos:
+            raise NotImplementedError(
+                "allow_combinations() with where_agg() on the "
+                "loop is not compiled — per-SUBSEQUENCE aggregate "
+                "registers would be the enumeration itself; drop "
+                "one of the modifiers")
+        return "loop_agg"
+    if pat._has_agg() and fam not in ("relaxed", "relaxed_within"):
+        raise NotImplementedError(
+            "where_agg() compiles on the single-anchor "
+            "skip-past-last machines (relaxed followed_by, with "
+            "or without within()) and, for the loop, the bounded "
+            "fork-loop shape (one_or_more + within + no_skip, "
+            "aggregate on the loop stage) — the other families "
+            "would need per-run aggregate payloads")
+    if fam == "fork":
+        # r10: the fork family carries per-anchor payloads —
+        # scope gated to pure relaxed chains. r11: where_prev rides
+        # the same payloads (the promotion event IS the new prev for
+        # every run it promotes).
+        xp = pat._expanded()
+        if any(_strict_flags(xp)) or any(
+                s.contiguity == "not_followed_by" for s in xp.stages):
+            raise NotImplementedError(
+                "where_rel() under no_skip() compiles on pure "
+                "relaxed followed_by chains — strict next() and "
+                "not_followed_by with per-anchor payloads are "
+                "not carried")
+        machine = "fork_rel"
+    elif fam not in ("relaxed", "relaxed_within"):
+        raise NotImplementedError(
+            "where_rel() compiles on the single-anchor "
+            "skip-past-last machines (relaxed followed_by, with "
+            "or without within()) and, since round 10, the "
+            "forking no_skip() family (per-anchor payloads) — "
+            "the any/strict/absence/loop families would need "
+            "run-set payloads; drop followed_by_any or the "
+            "relative condition")
+    else:
+        machine = "relaxed_rel"
+    if pat.stages[0].rel is not None:
+        raise NotImplementedError(
+            "where_rel() on the begin stage is undefined")
+    if pat.stages[0].agg is not None:
+        raise NotImplementedError(
+            "where_agg() on the begin stage is undefined")
+    return machine
+
+
+def _refuse_one_stage_combos(pat: Pattern) -> None:
+    if pat.stages[-1].combos and len(pat.stages) < 2:
+        raise NotImplementedError(
+            "allow_combinations() on a 1-stage loop is not "
+            "compiled (every event would be both anchor and "
+            "loop element) — anchor it with a prefix stage")
+
+
+def _until_bit(pat: Pattern) -> int:
+    """The condition-mask bit of the final stage's until() stop
+    condition (0 = none)."""
+    u = pat.stages[-1].until_sql
+    if u is None:
+        return 0
+    return 1 << (_cond_codes(pat)[("__until__", u)] - 1)
+
+
+def _skip_ref_index(pat: Pattern) -> int | None:
+    """Expanded-stage index that skip_to_first/skip_to_last(name)
+    references — the first/last copy of the named stage (times(n)
+    copies keep the name before '#') — or None for the other
+    strategies."""
+    if pat.skip not in ("to_first", "to_last"):
+        return None
+    idx = [i for i, s in enumerate(pat._expanded().stages)
+           if s.name.split("#")[0] == pat.skip_ref]
+    return idx[0] if pat.skip == "to_first" else idx[-1]
+
+
+def _prefix_plus_loop(pat: Pattern, lo: int, loop_pat: Pattern,
+                      df: DataFrame, keys: list[str], time_col: str,
+                      tiebreak_col: str, event_col: str) -> DataFrame:
+    """zeroOrMore counts, stage or GROUP: the prefix-only matches
+    (stages[:lo], zero loop repetitions) plus the loop pattern's
+    counts (>= 1 repetitions) partition the match set, so the per-key
+    counts add exactly. A 1-stage prefix matches every event
+    satisfying its condition."""
+    loop = compile_pattern(loop_pat, df, keys, time_col, tiebreak_col,
+                           event_col)
+    if lo == 1:
+        a_cond = pat.stages[0].cond_sql(event_col)
+        prefix = (df.filter(F.expr(a_cond)).groupBy(*keys)
+                  .agg(F.count("*").cast("long").alias("n_matches")))
+    else:
+        prefix_pat = Pattern(stages=[replace(s) for s in pat.stages[:lo]],
+                             within_us=pat.within_us, skip=pat.skip)
+        prefix = compile_pattern(prefix_pat, df, keys, time_col,
+                                 tiebreak_col, event_col)
+    u = (prefix.unionByName(loop).groupBy(*keys)
+         .agg(F.sum("n_matches").cast("long").alias("n_matches")))
+    return u.filter(F.col("n_matches") > 0)
+
+
 def compile_pattern(pat: Pattern, df: DataFrame, keys: list[str],
                     time_col: str, tiebreak_col: str,
                     event_col: str) -> DataFrame:
     """Compile `pat` over a BATCH keyed DataFrame. Returns per-key
     match counts (`n_matches > 0`) — or, for absence patterns, the
     anchor event ids with no qualifying follower."""
-    last = pat.stages[-1] if pat.stages else None
-    if last is not None and last.one_or_more and last.optional:
-        # zeroOrMore (r10): SUM of the empty-loop matches (prefix
-        # alone) and the bounded fork-loop counts — the two partition
-        # the match set by loop length (0 vs >= 1)
-        return _zero_or_more(pat, df, keys, time_col, tiebreak_col,
-                             event_col)
-    if pat._has_opt_range():
-        # optional()/times(a, b): union-of-variants on the fork
-        # machines (no_skip only — gated inside)
-        if pat._has_rel() or pat._has_agg():
-            raise NotImplementedError(
-                "where_rel()/where_agg() with optional()/times(a, b) "
-                "is not compiled — the variant union runs on the "
-                "forking machines, which carry no per-anchor payloads")
-        return _compile_variant_union(pat, df, keys, time_col,
-                                      tiebreak_col, event_col)
+    loop_pat = _zom_loop(pat)
+    if loop_pat is not None:
+        return _prefix_plus_loop(pat, len(pat.stages) - 1, loop_pat, df,
+                                 keys, time_col, tiebreak_col, event_col)
+    variants = _union_variants(pat)
+    if variants is not None:
+        # optional()/times(a, b), stage or group (r12): one fixed
+        # variant per choice, disjoint binding shapes — the shared
+        # variant-union fold sums exactly
+        return _variant_union_fold(pat, variants, df, keys, time_col,
+                                   tiebreak_col, event_col)
     fam = pat._family()
-    if pat._has_rel() or pat._has_agg():
-        if pat._has_agg() and fam == "fork_loop":
-            # r11: the Flink-docs canonical loop condition — where_agg
-            # on the final one_or_more stage, per-run registers in the
-            # parked set (aggregate scope = the LOOP's own events)
-            if pat._has_rel() or any(
-                    s.agg is not None for s in pat.stages[:-1]):
-                raise NotImplementedError(
-                    "loop patterns carry where_agg() on the LOOP "
-                    "stage only (aggregate over the loop's accepted "
-                    "events) — where_rel()/prefix-stage aggregates "
-                    "would need per-run whole-run payloads")
-            if len(pat.stages) < 2:
-                raise NotImplementedError(
-                    "where_agg() on a 1-stage loop is not compiled — "
-                    "anchor it with a prefix stage")
-            if pat.stages[-1].consec:
-                raise NotImplementedError(
-                    "consecutive() with where_agg() on the loop is "
-                    "not compiled — the strict-internal kill rule is "
-                    "carried by the plain loop (drop where_agg) and "
-                    "the run-aggregate by the relaxed loop (drop "
-                    "consecutive)")
-            if pat.stages[-1].combos:
-                raise NotImplementedError(
-                    "allow_combinations() with where_agg() on the "
-                    "loop is not compiled — per-SUBSEQUENCE aggregate "
-                    "registers would be the enumeration itself; drop "
-                    "one of the modifiers")
-            return _fork_loop_agg_machine(pat._expanded(), df, keys,
-                                          time_col, tiebreak_col,
-                                          event_col)
-        if pat._has_agg() and fam not in ("relaxed", "relaxed_within"):
-            raise NotImplementedError(
-                "where_agg() compiles on the single-anchor "
-                "skip-past-last machines (relaxed followed_by, with "
-                "or without within()) and, for the loop, the bounded "
-                "fork-loop shape (one_or_more + within + no_skip, "
-                "aggregate on the loop stage) — the other families "
-                "would need per-run aggregate payloads")
-        if fam == "fork":
-            # r10: the fork family carries per-anchor payloads now —
-            # scope gated to pure relaxed chains (strict/veto shapes
-            # keep the refusal below). r11: where_prev rides the same
-            # payloads (the promotion event IS the new prev for every
-            # run it promotes), so the L178 refusal is lifted.
-            xp = pat._expanded()
-            if any(_strict_flags(xp)) or _has_mid_nfb(xp) \
-                    or any(s.contiguity == "not_followed_by"
-                           for s in xp.stages):
-                raise NotImplementedError(
-                    "where_rel() under no_skip() compiles on pure "
-                    "relaxed followed_by chains — strict next() and "
-                    "not_followed_by with per-anchor payloads are "
-                    "not carried")
-            return _fork_rel_machine(xp, df, keys, time_col,
-                                     tiebreak_col, event_col)
-        if fam not in ("relaxed", "relaxed_within"):
-            raise NotImplementedError(
-                "where_rel() compiles on the single-anchor "
-                "skip-past-last machines (relaxed followed_by, with "
-                "or without within()) and, since round 10, the "
-                "forking no_skip() family (per-anchor payloads) — "
-                "the any/strict/absence/loop families would need "
-                "run-set payloads; drop followed_by_any or the "
-                "relative condition")
-        return _relaxed_rel_machine(pat._expanded(), df, keys,
-                                    time_col, tiebreak_col, event_col)
+    payload = _payload_machine(pat, fam)
+    if payload is not None:
+        machine = {"loop_agg": _fork_loop_agg_machine,
+                   "fork_rel": _fork_rel_machine,
+                   "relaxed_rel": _relaxed_rel_machine}[payload]
+        return machine(pat._expanded(), df, keys, time_col, tiebreak_col,
+                       event_col)
     if fam == "fork_group_loop":
         lo, hi = pat._gloop
         return _fork_group_loop_machine(pat, hi - lo, df, keys,
                                         time_col, tiebreak_col,
                                         event_col)
-    if fam == "group_variants":
-        # GROUP optional()/times(a, b) (r12): one fixed variant per
-        # copy count k in [a, b] (k=0 = the prefix alone), relaxed
-        # between copies — binding shapes are disjoint, so the shared
-        # variant-union fold sums exactly
-        return _variant_union_fold(pat, _gvar_variants(pat), df, keys,
-                                   time_col, tiebreak_col, event_col)
     if fam == "group_zom":
         # GROUP zeroOrMore (r12): prefix-only matches (0 repetitions)
-        # + the back-edge loop counts (>= 1 repetitions) partition the
-        # match set by repetition count — counts add exactly, the
-        # zeroOrMore argument verbatim
+        # + the back-edge loop counts (>= 1 repetitions)
         lo, hi = pat._gzom
         loop_pat = Pattern(stages=[replace(s) for s in pat.stages],
                            within_us=pat.within_us, skip=pat.skip)
         loop_pat._gloop = (lo, hi)
-        loop = compile_pattern(loop_pat, df, keys, time_col,
-                               tiebreak_col, event_col)
-        if lo == 1:
-            a_cond = pat.stages[0].cond_sql(event_col)
-            prefix = (df.filter(F.expr(a_cond)).groupBy(*keys)
-                      .agg(F.count("*").cast("long")
-                           .alias("n_matches")))
-        else:
-            prefix_pat = Pattern(
-                stages=[replace(s) for s in pat.stages[:lo]],
-                within_us=pat.within_us, skip=pat.skip)
-            prefix = compile_pattern(prefix_pat, df, keys, time_col,
-                                     tiebreak_col, event_col)
-        u = (prefix.unionByName(loop).groupBy(*keys)
-             .agg(F.sum("n_matches").cast("long").alias("n_matches")))
-        return u.filter(F.col("n_matches") > 0)
+        return _prefix_plus_loop(pat, lo, loop_pat, df, keys, time_col,
+                                 tiebreak_col, event_col)
     if fam == "skip_strategy":
         return _skip_strategy_counts(pat, df, keys, time_col,
                                      tiebreak_col, event_col)
@@ -1564,19 +1656,12 @@ def compile_pattern(pat: Pattern, df: DataFrame, keys: list[str],
     if fam == "any_dp_within":
         return _any_table_machine(pat, df, keys, time_col,
                                   tiebreak_col, event_col)
-    if fam == "relaxed":
+    if fam in ("relaxed", "relaxed_within"):
         return _relaxed_machine(pat, df, keys, time_col, tiebreak_col,
                                 event_col)
-    if fam == "relaxed_within":
-        return _relaxed_within_machine(pat, df, keys, time_col,
-                                       tiebreak_col, event_col)
     if fam == "fork_loop":
         if pat.stages[-1].combos:
-            if len(pat.stages) < 2:
-                raise NotImplementedError(
-                    "allow_combinations() on a 1-stage loop is not "
-                    "compiled (every event would be both anchor and "
-                    "loop element) — anchor it with a prefix stage")
+            _refuse_one_stage_combos(pat)
             return _fork_loop_combos_machine(pat, df, keys, time_col,
                                              tiebreak_col, event_col)
         return _fork_loop_machine(pat, df, keys, time_col, tiebreak_col,
@@ -1667,6 +1752,13 @@ def _stage_bits(pat: Pattern) -> list[int]:
     return [1 << (codes[s.cond_key()] - 1) for s in _await_stages(pat)]
 
 
+def _refuse_quantified_nfb(s: _Stage) -> None:
+    if s.times or s.one_or_more:
+        raise NotImplementedError(
+            "quantified not_followed_by is not compiled (a single "
+            "intervening event already kills the run)")
+
+
 def _veto_codes(pat: Pattern) -> list[int]:
     """Per-await VETO condition BIT (0 = none), index-aligned with
     _await_stages(pat) [FLINK-API: Pattern#notFollowedBy mid-pattern]:
@@ -1690,10 +1782,7 @@ def _veto_codes(pat: Pattern) -> list[int]:
                 raise NotImplementedError(
                     "consecutive not_followed_by stages are not "
                     "compiled — merge them or interleave awaits")
-            if s.times or s.one_or_more:
-                raise NotImplementedError(
-                    "quantified not_followed_by is not compiled (a "
-                    "single intervening event already kills the run)")
+            _refuse_quantified_nfb(s)
             if s.rel is not None:
                 # r10 (advice fix): _await_stages strips NFB stages,
                 # so a where_rel() attached to one never reaches the
@@ -1870,80 +1959,79 @@ def _prefilter_irrelevant(pat, df, event_col, extra_unsafe=False):
     return df.filter(_cond_mask_col(pat, event_col) != F.lit(0))
 
 
+def _anchor_transition(pat: Pattern, veto: bool = True):
+    """The ONE transition of the single-anchor skip-past-last machine,
+    shared by its count fold (_relaxed_machine, with or without
+    within()), the run-payload fold (_relaxed_rel_machine), timeout
+    extraction (compile_pattern_timeouts) and match extraction
+    (compile_pattern_matches). Returns `step(x, stage, anchor_t,
+    gates=None)` over the pre-event `stage` (and, under within(d), the
+    run's anchor µs): an expired partial resets BEFORE the event is
+    considered, so the expiring event can anchor a new match; a
+    strict-await miss OR a mid-pattern not_followed_by veto kills the
+    run, and the killing event may itself re-anchor one. `gates(stage)`
+    adds the caller's per-await conjuncts to the advance test; callers
+    whose patterns cannot carry a veto pass veto=False and get no veto
+    term. The result carries `expired` (None without within()),
+    `adv`, `done`, `restart`, `starts` (the event anchors a run) and
+    `next` (the next stage)."""
+    K = len(_stage_bits(pat))
+    w = pat.within_us
+    need = _need(pat)
+    strict = _strict_arr(pat)
+    vetos = F.array(*[F.lit(v) for v in _veto_codes(pat)]) if veto \
+        else None
+
+    def step(x, stage, anchor_t, gates=None):
+        expired = None
+        if w is not None:
+            expired = (stage > 0) & (x["t"] - anchor_t > w)
+            stage = F.when(expired, F.lit(0)).otherwise(stage)
+        adv = _hit(x["c"], F.get(need, stage))
+        for g in (gates(stage) if gates else ()):
+            adv = adv & g
+        done = adv & (stage == K - 1)
+        die = (~adv) & F.get(strict, stage)
+        if vetos is not None:
+            die = die | _hit(x["c"], F.get(vetos, stage))
+        die = die & (stage > 0)
+        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
+        return SimpleNamespace(
+            expired=expired, adv=adv, done=done, restart=restart,
+            starts=((stage == 0) & adv) | restart,
+            next=(F.when(done, F.lit(0))
+                  .when(adv, stage + 1)
+                  .when(restart, F.lit(1))
+                  .when(die, F.lit(0))
+                  .otherwise(stage)))
+    return step
+
+
 def _relaxed_machine(pat, df, keys, time_col, tiebreak_col, event_col):
     # K-stage single-anchor automaton under SKIP PAST LAST EVENT —
-    # q_cep_followed_by generalized; acc = (matches, stage), O(1) state.
-    # A non-matching event at a strict (next) await kills the run and
-    # may itself re-anchor a new one (mixed-contiguity support).
+    # q_cep_followed_by generalized; acc = (matches, stage), O(1)
+    # state. With within(d) (q_cep_followed_by_within) the accumulator
+    # also carries the anchor µs and expires partials before each
+    # transition. A non-matching event at a strict (next) await kills
+    # the run and may itself re-anchor a new one (mixed-contiguity
+    # support).
     df = _prefilter_irrelevant(pat, df, event_col)
-    K = len(_stage_codes(pat))
     seq = _seq(pat, time_col, tiebreak_col, event_col)
-    need = _need(pat)
-    strict = _strict_arr(pat)
-    veto = F.array(*[F.lit(v) for v in _veto_codes(pat)])
-    init = F.struct(F.lit(0).cast("long").alias("cnt"),
-                    F.lit(0).alias("stage"))
-
-    def step(acc, x):
-        adv = _hit(x["c"], F.get(need, acc["stage"]))
-        done = adv & (acc["stage"] == K - 1)
-        # a strict-await miss OR a mid-pattern not_followed_by veto
-        # kills the run (the veto event may itself re-anchor)
-        die = ((((~adv) & F.get(strict, acc["stage"]))
-                | _hit(x["c"], F.get(veto, acc["stage"])))
-               & (acc["stage"] > 0))
-        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
-        return F.struct(
-            F.when(done, acc["cnt"] + 1).otherwise(acc["cnt"])
-             .alias("cnt"),
-            F.when(done, F.lit(0))
-             .when(adv, acc["stage"] + 1)
-             .when(restart, F.lit(1))
-             .when(die, F.lit(0))
-             .otherwise(acc["stage"]).alias("stage"))
-
-    fold = F.aggregate(seq, init, step)
-    return (df.groupBy(*keys).agg(fold["cnt"].alias("n_matches"))
-            .filter(F.col("n_matches") > 0))
-
-
-def _relaxed_within_machine(pat, df, keys, time_col, tiebreak_col,
-                            event_col):
-    # K-stage single-anchor automaton under SKIP PAST LAST EVENT with a
-    # match horizon — q_cep_followed_by_within generalized: O(1) state
-    # (cnt, stage, anchor µs); an expired partial resets BEFORE the
-    # event is considered, so the expiring event can anchor a new match
-    df = _prefilter_irrelevant(pat, df, event_col)
-    K = len(_stage_codes(pat))
-    w = pat.within_us
-    seq = _seq(pat, time_col, tiebreak_col, event_col)
-    need = _need(pat)
-    strict = _strict_arr(pat)
-    veto = F.array(*[F.lit(v) for v in _veto_codes(pat)])
+    tr = _anchor_transition(pat)
+    anchored = pat.within_us is not None
     init = F.struct(F.lit(0).cast("long").alias("cnt"),
                     F.lit(0).alias("stage"),
-                    F.lit(0).cast("long").alias("anchor"))
+                    *([F.lit(0).cast("long").alias("anchor")]
+                      if anchored else []))
 
     def step(acc, x):
-        stage = F.when(
-            (acc["stage"] > 0) & (x["t"] - acc["anchor"] > w),
-            F.lit(0)).otherwise(acc["stage"])
-        adv = _hit(x["c"], F.get(need, stage))
-        done = adv & (stage == K - 1)
-        die = ((((~adv) & F.get(strict, stage))
-                | _hit(x["c"], F.get(veto, stage)))
-               & (stage > 0))
-        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
+        r = tr(x, acc["stage"], acc["anchor"] if anchored else None)
         return F.struct(
-            F.when(done, acc["cnt"] + 1).otherwise(acc["cnt"])
+            F.when(r.done, acc["cnt"] + 1).otherwise(acc["cnt"])
              .alias("cnt"),
-            F.when(done, F.lit(0))
-             .when(adv, stage + 1)
-             .when(restart, F.lit(1))
-             .when(die, F.lit(0))
-             .otherwise(stage).alias("stage"),
-            F.when(((stage == 0) & adv) | restart, x["t"])
-             .otherwise(acc["anchor"]).alias("anchor"))
+            r.next.alias("stage"),
+            *([F.when(r.starts, x["t"]).otherwise(acc["anchor"])
+               .alias("anchor")] if anchored else []))
 
     fold = F.aggregate(seq, init, step)
     return (df.groupBy(*keys).agg(fold["cnt"].alias("n_matches"))
@@ -2237,58 +2325,6 @@ def _absence_next(pat, df, keys, time_col, tiebreak_col, event_col):
             .select(*keys, F.col("start_event_id").alias("anchor_id")))
 
 
-def _zero_or_more(pat, df, keys, time_col, tiebreak_col, event_col):
-    """zeroOrMore — `one_or_more().optional()` on the final stage
-    [FLINK-API: Pattern#oneOrMore#optional] (r10): the match set
-    partitions by loop length — length 0 is exactly the PREFIX
-    pattern's match set (every completed prefix is its own match;
-    for a 2-stage pattern that is simply every anchor-condition
-    event), length >= 1 is exactly the bounded fork-loop's count —
-    so the per-key counts ADD. Both addends are already-pinned
-    machines; the loop side's own gates (within + no_skip, final
-    stage) and until() flow through unchanged. Streaming compiles too
-    since r11 — zero_or_more_stepper runs both addends side by side
-    in one keyed state row (the partition argument is order-free)."""
-    if pat._has_rel() or pat._has_agg():
-        raise NotImplementedError(
-            "where_rel()/where_agg() with zeroOrMore is not compiled")
-    if len(pat.stages) < 2:
-        raise NotImplementedError(
-            "zeroOrMore as the only stage is not compiled (every "
-            "position would hold an empty match) — anchor it with a "
-            "prefix stage")
-    if any(s.optional or s.times_hi is not None
-           for s in pat.stages[:-1]):
-        # r11 (advice fix): clearing optional over ALL stages made a
-        # mid-pattern optional() required on the loop addend while the
-        # prefix addend kept it optional — undercounting loop-length
-        # >= 1 matches that skip the optional stage. The loop side
-        # (fork-loop machine) carries no variant union, so refuse.
-        raise NotImplementedError(
-            "zeroOrMore with a non-final optional()/times(a, b) stage "
-            "is not compiled (the loop addend runs on the fork-loop "
-            "machine, which carries fixed stages) — drop the "
-            "mid-pattern quantifier or split the pattern")
-    loop_pat = Pattern(
-        stages=(list(pat.stages[:-1])
-                + [replace(pat.stages[-1], optional=False)]),
-        within_us=pat.within_us, skip=pat.skip)
-    loop = compile_pattern(loop_pat, df, keys, time_col, tiebreak_col,
-                           event_col)
-    if len(pat.stages) == 2:
-        a_cond = pat.stages[0].cond_sql(event_col)
-        prefix = (df.filter(F.expr(a_cond)).groupBy(*keys)
-                  .agg(F.count("*").cast("long").alias("n_matches")))
-    else:
-        prefix_pat = Pattern(stages=list(pat.stages[:-1]),
-                             within_us=pat.within_us, skip=pat.skip)
-        prefix = compile_pattern(prefix_pat, df, keys, time_col,
-                                 tiebreak_col, event_col)
-    u = (prefix.unionByName(loop).groupBy(*keys)
-         .agg(F.sum("n_matches").cast("long").alias("n_matches")))
-    return u.filter(F.col("n_matches") > 0)
-
-
 def _fork_loop_machine(pat, df, keys, time_col, tiebreak_col, event_col):
     """Bounded looping quantifier on the forking NFA [FLINK-API:
     Pattern#oneOrMore on the final stage, under noSkip + within(d)]:
@@ -2318,9 +2354,7 @@ def _fork_loop_machine(pat, df, keys, time_col, tiebreak_col, event_col):
     df = _prefilter_irrelevant(pat, df, event_col, extra_unsafe=consec)
     st = _stage_bits(pat)
     strict = _strict_flags(pat)
-    until_sql = pat.stages[-1].until_sql
-    ub = (0 if until_sql is None
-          else 1 << (_cond_codes(pat)[("__until__", until_sql)] - 1))
+    ub = _until_bit(pat)
     seq = _seq(pat, time_col, tiebreak_col, event_col)
     empty = F.array().cast("array<long>")
     init = F.struct(F.lit(0).cast("long").alias("cnt"),
@@ -2431,6 +2465,16 @@ def _fork_group_loop_machine(pat, gl, df, keys, time_col,
 _COMBOS_REG_LIMIT = 1 << 61
 
 
+def _combos_fault(key, reg: int) -> ValueError:
+    """The streaming allow_combinations() density fault (the batch
+    fold raises the same text through F.raise_error)."""
+    return ValueError(
+        f"allow_combinations(): subsequence register for key {key} "
+        f"reached c={reg} = 2^m - 1 (m = the run's in-horizon "
+        "loop-event density) — doubling would cross the exact BIGINT "
+        "bound 2^62; shrink within() or drop allow_combinations()")
+
+
 def _fork_loop_combos_machine(pat, df, keys, time_col, tiebreak_col,
                               event_col):
     """Bounded loop under NON-DETERMINISTIC relaxed internal
@@ -2455,9 +2499,7 @@ def _fork_loop_combos_machine(pat, df, keys, time_col, tiebreak_col,
     df = _prefilter_irrelevant(pat, df, event_col)
     st = _stage_bits(pat)
     strict = _strict_flags(pat)
-    until_sql = pat.stages[-1].until_sql
-    ub = (0 if until_sql is None
-          else 1 << (_cond_codes(pat)[("__until__", until_sql)] - 1))
+    ub = _until_bit(pat)
     seq = _seq(pat, time_col, tiebreak_col, event_col)
     empty = F.array().cast("array<long>")
     empty_lp = F.expr(
@@ -2564,9 +2606,7 @@ def _fork_loop_agg_machine(pat, df, keys, time_col, tiebreak_col,
     fn_, acol, op, rhs = pat.stages[-1].agg
     st = _stage_bits(pat)
     strict = _strict_flags(pat)
-    until_sql = pat.stages[-1].until_sql
-    ub = (0 if until_sql is None
-          else 1 << (_cond_codes(pat)[("__until__", until_sql)] - 1))
+    ub = _until_bit(pat)
     seq = F.array_sort(F.collect_list(F.struct(
         F.unix_micros(time_col).alias("t"),
         F.col(tiebreak_col).alias("eid"),
@@ -2674,18 +2714,10 @@ def _relaxed_rel_machine(pat, df, keys, time_col, tiebreak_col,
     advance, candidate included in the tested value. O(1) state like
     its rel-free twins; null operands compare as False (three-valued
     SQL coalesced), matching the Python reference."""
-    K = len(_stage_bits(pat))
-    w = pat.within_us
     awaits = _await_stages(pat)
     rels = [s.rel for s in awaits]
     srcs = [s.rel_src for s in awaits]
     aggs = [s.agg for s in awaits]
-    if rels[0] is not None:
-        raise NotImplementedError(
-            "where_rel() on the begin stage is undefined")
-    if aggs[0] is not None:
-        raise NotImplementedError(
-            "where_agg() on the begin stage is undefined")
     vcols = sorted({r[0] for r in rels if r}
                    | {r[2] for r in rels if r}
                    | {a[1] for a in aggs if a})
@@ -2703,9 +2735,7 @@ def _relaxed_rel_machine(pat, df, keys, time_col, tiebreak_col,
                        if a and a[0] in ("sum", "avg")})
     min_cols = sorted({a[1] for a in aggs if a and a[0] == "min"})
     max_cols = sorted({a[1] for a in aggs if a and a[0] == "max"})
-    need = _need(pat)
-    strict = _strict_arr(pat)
-    veto = F.array(*[F.lit(v) for v in _veto_codes(pat)])
+    tr = _anchor_transition(pat)
     seq = F.array_sort(F.collect_list(F.struct(
         F.unix_micros(time_col).alias("t"),
         F.col(tiebreak_col).alias("eid"),
@@ -2721,13 +2751,7 @@ def _relaxed_rel_machine(pat, df, keys, time_col, tiebreak_col,
         *[F.lit(0.0).alias(f"rmin_{c}") for c in min_cols],
         *[F.lit(0.0).alias(f"rmax_{c}") for c in max_cols])
 
-    def step(acc, x):
-        if w is None:
-            stage = acc["stage"]
-        else:
-            stage = F.when(
-                (acc["stage"] > 0) & (x["t"] - acc["anchor"] > w),
-                F.lit(0)).otherwise(acc["stage"])
+    def gates(acc, x, stage):
         rel_cells = []
         for r, src in zip(rels, srcs):
             if r is None:
@@ -2768,23 +2792,17 @@ def _relaxed_rel_machine(pat, df, keys, time_col, tiebreak_col,
                                                  xv)))
                 agg_cells.append(F.coalesce(
                     _REL_OPS[op](val, F.lit(rhs)), F.lit(False)))
-        adv = (_hit(x["c"], F.get(need, stage))
-               & F.get(F.array(*rel_cells), stage)
-               & F.get(F.array(*agg_cells), stage))
-        done = adv & (stage == K - 1)
-        die = ((((~adv) & F.get(strict, stage))
-                | _hit(x["c"], F.get(veto, stage)))
-               & (stage > 0))
-        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
-        starts = ((stage == 0) & adv) | restart
+        return [F.get(F.array(*rel_cells), stage),
+                F.get(F.array(*agg_cells), stage)]
+
+    def step(acc, x):
+        r = tr(x, acc["stage"], acc["anchor"],
+               lambda stage: gates(acc, x, stage))
+        adv, restart, starts = r.adv, r.restart, r.starts
         return F.struct(
-            F.when(done, acc["cnt"] + 1).otherwise(acc["cnt"])
+            F.when(r.done, acc["cnt"] + 1).otherwise(acc["cnt"])
              .alias("cnt"),
-            F.when(done, F.lit(0))
-             .when(adv, stage + 1)
-             .when(restart, F.lit(1))
-             .when(die, F.lit(0))
-             .otherwise(stage).alias("stage"),
+            r.next.alias("stage"),
             F.when(starts, x["t"]).otherwise(acc["anchor"])
              .alias("anchor"),
             *[F.when(starts, x[f"v_{c}"]).otherwise(acc[f"av_{c}"])
@@ -2843,9 +2861,6 @@ def _fork_rel_machine(pat, df, keys, time_col, tiebreak_col,
     w = pat.within_us
     rels = [s.rel for s in pat.stages]
     srcs = [s.rel_src for s in pat.stages]
-    if rels[0] is not None:
-        raise NotImplementedError(
-            "where_rel() on the begin stage is undefined")
     acols = sorted({r[2] for r, sc in zip(rels, srcs)
                     if r and sc == "anchor"})
     # prev-source refs (where_prev on the fork family, r11 — lifts
@@ -2948,8 +2963,10 @@ def _any_dp_machine(pat, df, keys, time_col, tiebreak_col, event_col):
     stage i; an event hitting stage i adds c_{i-1} (or 1 for the begin
     stage), all reads from the pre-event snapshot so one event never
     occupies two positions of the same subsequence. O(K) state makes
-    this the cheapest CEP machine in the engine — pure codegen fold,
-    and the streaming twin carries K longs per key, unbounded history.
+    this the cheapest CEP machine in the engine — one fold over K
+    longs (F.aggregate runs interpreted per element: ArrayAggregate is
+    a CodegenFallback expression), and the streaming twin carries K
+    longs per key, unbounded history.
     Counts are exact up to int64 (subsequence counts are combinatorial
     by nature; at C(n,K) overflow scale the answer itself is the
     problem, not the machine)."""
@@ -3054,25 +3071,9 @@ def _absence(pat, df, keys, time_col, tiebreak_col, event_col):
             .select(*keys, "anchor_id"))
 
 
-def compile_pattern_timeouts(pat: Pattern, df: DataFrame,
-                             keys: list[str], time_col: str,
-                             tiebreak_col: str,
-                             event_col: str) -> DataFrame:
-    """TIMED-OUT PARTIAL MATCHES [FLINK-API: PatternStream.select(
-    OutputTag, PatternTimeoutFunction, PatternSelectFunction) — the
-    timeout side output: a partial match that cannot complete inside
-    within(d) is emitted with its bindings instead of vanishing]
-    (r11): one row per timed-out run of the SINGLE-ANCHOR
-    skip-past-last machine — (keys..., anchor_id, stages_matched,
-    timeout_at_us = anchor_t + d). Only window EXPIRY produces a
-    timeout; a run killed by a strict next() mismatch or a mid-pattern
-    not_followed_by veto is DISCARDED silently, exactly Flink's NFA
-    (timeouts fire on window expiry alone). A run still live at
-    end-of-input times out too (bounded input — the watermark passes
-    every deadline). Requires within(); the forking (no_skip) family
-    refuses (per-run timeout extraction would need the payload sets —
-    use pattern() for counts); rel/agg conditions refuse (counts
-    only)."""
+def _timeouts_gates(pat: Pattern) -> Pattern:
+    """pattern_timeouts() refusals, shared by batch and streaming;
+    returns the quantifier-expanded pattern."""
     if pat.within_us is None:
         raise ValueError(
             "pattern_timeouts() needs within(): without a horizon no "
@@ -3097,15 +3098,35 @@ def compile_pattern_timeouts(pat: Pattern, df: DataFrame,
         raise NotImplementedError(
             "absence patterns ARE the timeout output — use pattern() "
             "(the anchor rows are the timed-out anchors)")
-    pat = pat._expanded()
-    K = len(_stage_bits(pat))
-    if K < 2:
+    xp = pat._expanded()
+    if len(xp.stages) < 2:
         raise ValueError("pattern_timeouts() needs at least two "
                          "stages after quantifier expansion")
+    return xp
+
+
+def compile_pattern_timeouts(pat: Pattern, df: DataFrame,
+                             keys: list[str], time_col: str,
+                             tiebreak_col: str,
+                             event_col: str) -> DataFrame:
+    """TIMED-OUT PARTIAL MATCHES [FLINK-API: PatternStream.select(
+    OutputTag, PatternTimeoutFunction, PatternSelectFunction) — the
+    timeout side output: a partial match that cannot complete inside
+    within(d) is emitted with its bindings instead of vanishing]
+    (r11): one row per timed-out run of the SINGLE-ANCHOR
+    skip-past-last machine — (keys..., anchor_id, stages_matched,
+    timeout_at_us = anchor_t + d). Only window EXPIRY produces a
+    timeout; a run killed by a strict next() mismatch or a mid-pattern
+    not_followed_by veto is DISCARDED silently, exactly Flink's NFA
+    (timeouts fire on window expiry alone). A run still live at
+    end-of-input times out too (bounded input — the watermark passes
+    every deadline). Requires within(); the forking (no_skip) family
+    refuses (per-run timeout extraction would need the payload sets —
+    use pattern() for counts); rel/agg conditions refuse (counts
+    only)."""
+    pat = _timeouts_gates(pat)
     w = pat.within_us
-    need = _need(pat)
-    strict = _strict_arr(pat)
-    veto = F.array(*[F.lit(v) for v in _veto_codes(pat)])
+    tr = _anchor_transition(pat)
     seq = _seq(pat, time_col, tiebreak_col, event_col)
     empty = F.expr(
         "CAST(array() AS array<struct<aid:bigint,st:int,"
@@ -3116,28 +3137,17 @@ def compile_pattern_timeouts(pat: Pattern, df: DataFrame,
                     empty.alias("touts"))
 
     def step(acc, x):
-        expired = (acc["stage"] > 0) & (x["t"] - acc["at"] > w)
-        touts = F.when(expired, F.concat(acc["touts"], F.array(
+        r = tr(x, acc["stage"], acc["at"])
+        touts = F.when(r.expired, F.concat(acc["touts"], F.array(
             F.struct(acc["aid"].alias("aid"),
                      acc["stage"].alias("st"),
-                     (acc["at"] + w).alias("tout")))))             .otherwise(acc["touts"])
-        stage = F.when(expired, F.lit(0)).otherwise(acc["stage"])
-        adv = _hit(x["c"], F.get(need, stage))
-        done = adv & (stage == K - 1)
-        die = ((((~adv) & F.get(strict, stage))
-                | _hit(x["c"], F.get(veto, stage)))
-               & (stage > 0))
-        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
-        starts = ((stage == 0) & adv) | restart
+                     (acc["at"] + w).alias("tout"))))) \
+            .otherwise(acc["touts"])
         return F.struct(
-            F.when(done, F.lit(0))
-             .when(adv, stage + 1)
-             .when(restart, F.lit(1))
-             .when(die, F.lit(0))
-             .otherwise(stage).alias("stage"),
-            F.when(starts, x["eid"]).otherwise(acc["aid"])
+            r.next.alias("stage"),
+            F.when(r.starts, x["eid"]).otherwise(acc["aid"])
              .alias("aid"),
-            F.when(starts, x["t"]).otherwise(acc["at"]).alias("at"),
+            F.when(r.starts, x["t"]).otherwise(acc["at"]).alias("at"),
             touts.alias("touts"))
 
     fold = F.aggregate(seq, init, step)
@@ -3157,18 +3167,9 @@ def compile_pattern_timeouts(pat: Pattern, df: DataFrame,
                     F.col("x.tout").alias("timeout_at_us")))
 
 
-def compile_pattern_matches(pat: Pattern, df: DataFrame,
-                            keys: list[str], time_col: str,
-                            tiebreak_col: str,
-                            event_col: str) -> DataFrame:
-    """Match EXTRACTION [FLINK-API: PatternStream.select(PatternSelect
-    Function) / SQL MATCH_RECOGNIZE MEASURES]: one output row per
-    completed match with its bindings — anchor event id, closing event
-    id, span — numbered per key. Compiles the relaxed followed_by
-    family (with or without `within()`), generalizing the
-    q_cep_match_measures machine to K stages: the fold accumulator
-    carries (stage, anchor bindings, completed-match array) and the
-    match array posexplodes to rows — rows = matches, never events²."""
+def _matches_gates(pat: Pattern) -> tuple[str, Pattern]:
+    """pattern_matches() refusals, shared by batch and streaming;
+    returns the family and the quantifier-expanded pattern."""
     if pat._has_opt_range():
         raise NotImplementedError(
             "optional()/times(a, b) compile only through batch "
@@ -3216,11 +3217,27 @@ def compile_pattern_matches(pat: Pattern, df: DataFrame,
             "machines)")
     # expand FIRST: begin(a).times(3) is a 1-stage pattern whose
     # expansion has 3 stages — the guard applies to the expanded form
-    pat = pat._expanded()
-    if len(pat.stages) < 2:
+    xp = pat._expanded()
+    if len(xp.stages) < 2:
         raise ValueError("pattern_matches() needs at least two stages "
                          "after quantifier expansion (a single-stage "
                          "pattern is a filter)")
+    return fam, xp
+
+
+def compile_pattern_matches(pat: Pattern, df: DataFrame,
+                            keys: list[str], time_col: str,
+                            tiebreak_col: str,
+                            event_col: str) -> DataFrame:
+    """Match EXTRACTION [FLINK-API: PatternStream.select(PatternSelect
+    Function) / SQL MATCH_RECOGNIZE MEASURES]: one output row per
+    completed match with its bindings — anchor event id, closing event
+    id, span — numbered per key. Compiles the relaxed followed_by
+    family (with or without `within()`), generalizing the
+    q_cep_match_measures machine to K stages: the fold accumulator
+    carries (stage, anchor bindings, completed-match array) and the
+    match array posexplodes to rows — rows = matches, never events²."""
+    fam, pat = _matches_gates(pat)
     if fam == "skip_strategy":
         # _skip_strategy_matches re-expands (a no-op here) — names
         # survive expansion, so skip_ref still resolves
@@ -3235,11 +3252,8 @@ def compile_pattern_matches(pat: Pattern, df: DataFrame,
     if fam == "fork":
         return _fork_matches(pat, df, keys, time_col, tiebreak_col,
                              event_col)
-    K = len(pat.stages)
-    w = pat.within_us
     seq = _seq(pat, time_col, tiebreak_col, event_col)
-    need = _need(pat)
-    strict = _strict_arr(pat)
+    tr = _anchor_transition(pat, veto=False)
     empty = F.expr(
         "CAST(array() AS array<struct<start_id:bigint,end_id:bigint,"
         "span_us:bigint>>)")
@@ -3249,32 +3263,19 @@ def compile_pattern_matches(pat: Pattern, df: DataFrame,
                     empty.alias("matches"))
 
     def step(acc, x):
-        stage = acc["stage"]
-        if w is not None:
-            stage = F.when(
-                (stage > 0) & (x["t"] - acc["anchor_t"] > w),
-                F.lit(0)).otherwise(stage)
-        adv = _hit(x["c"], F.get(need, stage))
-        done = adv & (stage == K - 1)
-        die = (~adv) & F.get(strict, stage) & (stage > 0)
-        restart = die & _hit(x["c"], F.get(need, F.lit(0)))
-        starts = ((stage == 0) & adv) | restart
+        r = tr(x, acc["stage"], acc["anchor_t"])
         m = F.struct(acc["anchor_id"].alias("start_id"),
                      x["eid"].alias("end_id"),
                      (x["t"] - acc["anchor_t"]).alias("span_us"))
         # a K=1-expanded edge can't occur (>=2 stages guarded above),
         # so `starts` and `done` never coincide
         return F.struct(
-            F.when(done, F.lit(0))
-             .when(adv, stage + 1)
-             .when(restart, F.lit(1))
-             .when(die, F.lit(0))
-             .otherwise(stage).alias("stage"),
-            F.when(starts, x["eid"]).otherwise(acc["anchor_id"])
+            r.next.alias("stage"),
+            F.when(r.starts, x["eid"]).otherwise(acc["anchor_id"])
              .alias("anchor_id"),
-            F.when(starts, x["t"]).otherwise(acc["anchor_t"])
+            F.when(r.starts, x["t"]).otherwise(acc["anchor_t"])
              .alias("anchor_t"),
-            F.when(done, F.concat(acc["matches"], F.array(m)))
+            F.when(r.done, F.concat(acc["matches"], F.array(m)))
              .otherwise(acc["matches"]).alias("matches"))
 
     folded = df.groupBy(*keys).agg(
@@ -3351,7 +3352,7 @@ def _fork_matches(pat, df, keys, time_col, tiebreak_col, event_col):
 
 
 def _skip_strategy_matches(pat, df, keys, time_col, tiebreak_col,
-                           event_col, mode: str | None = None):
+                           event_col):
     """AfterMatchSkipStrategy variants [FLINK-API:
     AfterMatchSkipStrategy#skipToNext / #skipToFirst(name) /
     #skipToLast(name)] (r10): the noSkip fork ENUMERATION (the
@@ -3380,21 +3381,19 @@ def _skip_strategy_matches(pat, df, keys, time_col, tiebreak_col,
 
     A candidate is discarded iff its start rn falls in any interval
     recorded by a previously-emitted match; both folds are
-    whole-stage-codegen F.aggregate over ONE per-key sorted sequence
-    (one shuffle; candidates ≪ events, so the prune fold is cheap).
+    F.aggregate over ONE per-key sorted sequence, interpreted per
+    element in the JVM (ArrayAggregate is a CodegenFallback
+    expression — no Python either way; one shuffle; candidates ≪
+    events, so the prune fold is cheap).
     Quantified (times(n)) named stages expand relaxed-internal, one
     bound event per copy — first/last reference the first/last copy's
     binding."""
-    mode = mode or pat.skip
+    mode = pat.skip
+    jn = _skip_ref_index(pat)
     pat = pat._expanded()
     K = len(pat.stages)
     w = pat.within_us
     st = _stage_bits(pat)
-    jn = None
-    if mode in ("to_first", "to_last"):
-        base = [s.name.split("#")[0] for s in pat.stages]
-        idx = [i for i, b in enumerate(base) if b == pat.skip_ref]
-        jn = idx[0] if mode == "to_first" else idx[-1]
     seq0 = _seq(pat, time_col, tiebreak_col, event_col)
     seq = F.transform(
         seq0,
@@ -3586,9 +3585,7 @@ def _fork_loop_matches(pat, df, keys, time_col, tiebreak_col,
     K = len(pat.stages)
     w = pat.within_us
     consec = pat.stages[-1].consec
-    until_sql = pat.stages[-1].until_sql
-    ub = (0 if until_sql is None
-          else 1 << (_cond_codes(pat)[("__until__", until_sql)] - 1))
+    ub = _until_bit(pat)
     st = _stage_bits(pat)
     strict = _strict_flags(pat)
     seq = _seq(pat, time_col, tiebreak_col, event_col)
@@ -3655,7 +3652,7 @@ def _fork_loop_matches(pat, df, keys, time_col, tiebreak_col,
 
 # -- streaming: the keyed-state NFA twins ------------------------------
 
-def relaxed_stepper_scalar(type_codes: dict[str, int] | None,
+def relaxed_stepper(type_codes: dict[str, int] | None,
                     stage_codes: list[int],
                     strict: list[bool] | None = None,
                     key_cols: list[str] | None = None,
@@ -3673,7 +3670,13 @@ def relaxed_stepper_scalar(type_codes: dict[str, int] | None,
     fixtures keep passing codes 1/2); `type_codes=None` means the
     event column already carries the Spark-computed condition mask —
     how where()/or_where() predicates reach the stream (the SQL
-    evaluates JVM-side, never per-row Python)."""
+    evaluates JVM-side, never per-row Python).
+
+    A searchsorted JUMP variant of this loop measured slower at the
+    stress fixture's density (r14: ~1.6 vs ~2.2 M events/s — a jump
+    costs ~4x a step but skips only ~3.5 events), so the O(1)-state
+    single-anchor machines keep the per-event loop; the fork/loop
+    family, whose set-valued state amortizes, is vectorized."""
     K = len(stage_codes)
     strict = strict or [False] * K
     veto = veto or [0] * K
@@ -3784,7 +3787,7 @@ def kmp_stepper(type_codes: dict[str, int], stage_codes: list[int],
     return step
 
 
-def relaxed_within_stepper_scalar(type_codes: dict[str, int] | None,
+def relaxed_within_stepper(type_codes: dict[str, int] | None,
                            stage_codes: list[int], within_us: int,
                            strict: list[bool] | None = None,
                            key_cols: list[str] | None = None,
@@ -4157,14 +4160,7 @@ def fork_loop_combos_stepper_scalar(stage_bits: list[int], within_us: int,
                     # wrap, so without this the fault would surface
                     # as an opaque state-column overflow instead
                     if a[1] >= _COMBOS_REG_LIMIT:
-                        raise ValueError(
-                            "allow_combinations(): subsequence "
-                            f"register for key {key} reached "
-                            f"c={a[1]} = 2^m - 1 (m = the run's "
-                            "in-horizon loop-event density) — "
-                            "doubling would cross the exact BIGINT "
-                            "bound 2^62; shrink within() or drop "
-                            "allow_combinations()")
+                        raise _combos_fault(key, a[1])
                 doubled = [(a[0], 2 * a[1] + 1) for a in lp]
                 parked = [(a, 1) for a in sets[K - 2]]
                 sets[K - 2] = deque()
@@ -4558,16 +4554,6 @@ def zero_or_more_stepper_scalar(stage_bits: list[int], within_us: int,
 # ---------------------------------------------------------------------------
 
 
-# relaxed / relaxed_within: the JUMP variant (searchsorted transitions)
-# was built and MEASURED in r14 — and rejected (guide §1.3). At the
-# stress fixture's density the single-anchor scalar loop runs ~2.2 M
-# events/s vs the jump's ~1.6: one jump transition costs ~4x a scalar
-# step but skips only ~3.5 events here. The fork/loop family below IS
-# vectorized (set-valued state amortizes); the O(1)-state machines
-# keep the scalar loop. tests/test_cep_vec_equiv.py retains the
-# differential harness should a sparser workload revisit this.
-relaxed_stepper = relaxed_stepper_scalar
-relaxed_within_stepper = relaxed_within_stepper_scalar
 
 
 def fork_stepper(type_codes: dict[str, int] | None,
@@ -4886,30 +4872,33 @@ def fork_loop_combos_stepper(stage_bits: list[int], within_us: int,
             else:
                 lcounts = np.empty(0, np.int64)
                 lparked = np.empty(0, bool)
-            # density guard — trip at the first close where a
-            # surviving register would reach the exact-BIGINT bound,
-            # exactly like the scalar per-close loop: the register
-            # before the m-th surviving close (1-based) is
-            # (r0+1)*2^(m-1) - 1, monotone in m, so the reported c is
-            # the value at the SMALLEST tripping m (the scalar loop's
-            # first raise), found in <= ~62 doublings
-            def _check(r0: int, m_count: int) -> None:
+            # density guard — fault exactly where the scalar per-close
+            # loop does: at the EARLIEST close (event order) at which a
+            # parked register has reached the exact-BIGINT bound, for
+            # the first such run in parked (anchor µs, register) order.
+            # A run's register before its j-th register close is
+            # (r0+1)*2^(j-1) - 1, monotone in j, so its tripping close
+            # is found in <= ~62 doublings; the fault names the
+            # minimum (close position, anchor, register) over runs
+            trips = []
+
+            def _trip(r0: int, m_count: int, a: int, p: int,
+                      parks: int) -> None:
+                # register closes follow entry position p, after the
+                # close that parks a fresh run (`parks` = 1)
                 if m_count < 1 or \
                         (r0 + 1) * (1 << (m_count - 1)) - 1 \
                         < _COMBOS_REG_LIMIT:
                     return
-                reg = r0
-                for _ in range(m_count):
-                    if reg >= _COMBOS_REG_LIMIT:
-                        raise ValueError(
-                            "allow_combinations(): subsequence "
-                            f"register for key {key} reached "
-                            f"c={reg} = 2^m - 1 (m = the run's "
-                            "in-horizon loop-event density) — "
-                            "doubling would cross the exact BIGINT "
-                            "bound 2^62; shrink within() or drop "
-                            "allow_combinations()")
-                    reg = 2 * reg + 1
+                reg, j = r0, 0
+                while reg < _COMBOS_REG_LIMIT:
+                    reg, j = 2 * reg + 1, j + 1
+                closes = (c & stage_bits[K - 1]) != 0
+                if until_bit:
+                    closes &= (c & until_bit) == 0
+                cpos = np.flatnonzero(closes)
+                k = int(np.searchsorted(cpos, p, side="right"))
+                trips.append((int(cpos[k + parks + j]), a, reg))
 
             total = 0
             for i in range(arr_a.size):
@@ -4917,14 +4906,16 @@ def fork_loop_combos_stepper(stage_bits: list[int], within_us: int,
                 if m:
                     # parks at its first close (contributing 1 from
                     # the awaiting set), then m-1 register closes
-                    _check(1, m - 1)
+                    _trip(1, m - 1, int(arr_a[i]), int(arr_p[i]), 1)
                     total += (1 << m) - 1
             for i in range(lpa.size):
                 m = int(lcounts[i])
                 if m:
                     r0 = int(lp_r[i])
-                    _check(r0, m)
+                    _trip(r0, m, int(lpa[i]), -1, 0)
                     total += (r0 + 1) * ((1 << m) - 1)
+            if trips:
+                raise _combos_fault(key, min(trips)[2])
             cnt += total
             new_lp = []
             for i in range(lpa.size):
@@ -6082,17 +6073,45 @@ def fork_loop_matches_stepper(type_codes: dict[str, int] | None,
     return step
 
 
-def _key_sql_type(sdf: DataFrame, key: str) -> str:
-    """The key column's Spark SQL type string for the output/state
-    schemas — derived, not assumed, so string/int keys stream too."""
+def _key_schema(sdf: DataFrame, keys: list[str]) -> str:
+    """The key columns' Spark SQL DDL for the output schemas — derived,
+    not assumed, so string/int (and composite) keys stream too."""
     from pyspark.sql.types import AtomicType
 
-    dt = sdf.schema[key].dataType
-    if not isinstance(dt, AtomicType):
-        raise NotImplementedError(
-            f"streaming pattern() needs an atomic key column; "
-            f"{key!r} is {dt.simpleString()}")
-    return dt.simpleString()
+    cols = []
+    for k in keys:
+        dt = sdf.schema[k].dataType
+        if not isinstance(dt, AtomicType):
+            raise NotImplementedError(
+                f"streaming pattern() needs an atomic key column; "
+                f"{k!r} is {dt.simpleString()}")
+        cols.append(f"{k} {dt.simpleString()}")
+    return ", ".join(cols)
+
+
+def _masked(sdf: DataFrame, pat: Pattern, keys: list[str], time_col: str,
+            tiebreak_col: str, event_col: str, *extra) -> DataFrame:
+    """The mask steppers' positional input [FLINK-API: keyBy(a, b) —
+    COMPOSITE keys]: keys first, then time, tiebreak and the condition
+    MASK `__m` (computed JVM-side by _cond_mask_col, so where()/
+    or_where() predicates never run per-row Python), then any value
+    columns. The steppers echo every key column back by NAME."""
+    return sdf.select(*keys, time_col, tiebreak_col,
+                      _cond_mask_col(pat, event_col).alias("__m"), *extra)
+
+
+def _sets_schema(K: int, *extra: str) -> str:
+    """State schema of the forking steppers: the count, the K-1
+    anchor-set arrays, then the machine's extra columns."""
+    return "cnt long, " + ", ".join(
+        [f"s{i} array<long>" for i in range(1, K)] + list(extra))
+
+
+def _skip_state_schema(K: int) -> str:
+    return ("cnt long, rn long, klo array<long>, khi array<long>"
+            + "".join(f", s{i}t array<long>, s{i}i array<long>"
+                      f", s{i}r array<long>, s{i}n array<long>"
+                      for i in range(1, K)))
 
 
 def compile_pattern_stream(pat: Pattern, sdf: DataFrame,
@@ -6104,504 +6123,276 @@ def compile_pattern_stream(pat: Pattern, sdf: DataFrame,
     convergence the streaming twins pin). ABSENCE patterns compile to
     the timer-driven unanswered-anchor stepper (append mode; requires a
     `withWatermark`'d input — Flink's notFollowedBy timers map to
-    event-time timeouts)."""
+    event-time timeouts). The refusals batch and streaming share live
+    in the gate helpers both call (_zom_loop, _union_variants,
+    _family, _payload_machine); only the stream-specific ones are
+    here."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if pat.stages and pat.stages[-1].one_or_more \
-            and pat.stages[-1].optional:
-        # streaming zeroOrMore (r11 — replaces the r10 refusal): both
-        # addends already had steppers (prefix fork + fork loop); the
-        # batch match-set partition argument (loop length 0 vs >= 1)
-        # is order-free, so one state row runs them side by side and
-        # sums — see zero_or_more_stepper. Batch gates mirrored.
-        if pat._has_rel() or pat._has_agg():
-            raise NotImplementedError(
-                "where_rel()/where_agg() with zeroOrMore is not "
-                "compiled")
-        if len(pat.stages) < 2:
-            raise NotImplementedError(
-                "zeroOrMore as the only stage is not compiled (every "
-                "position would hold an empty match) — anchor it "
-                "with a prefix stage")
-        if any(s.optional or s.times_hi is not None
-               for s in pat.stages[:-1]):
-            raise NotImplementedError(
-                "zeroOrMore with a non-final optional()/times(a, b) "
-                "stage is not compiled (the loop addend runs on the "
-                "fork-loop machine, which carries fixed stages) — "
-                "drop the mid-pattern quantifier or split the pattern")
-        loop_pat = Pattern(
-            stages=(list(pat.stages[:-1])
-                    + [replace(pat.stages[-1], optional=False)]),
-            within_us=pat.within_us, skip=pat.skip)
+    # every branch sets the stepper `fn`, its input `proj`, the output
+    # columns after the keys and the state schema; the absence
+    # branches also switch to append mode with event-time timers
+    out_cols = "n_matches long"
+    mode, timeout = "Update", GroupStateTimeout.NoTimeout
+    loop_pat = _zom_loop(pat)
+    variants = None if loop_pat is not None else _union_variants(pat)
+    if loop_pat is not None:
+        # streaming zeroOrMore (r11): both addends already had
+        # steppers (prefix fork + fork loop); the batch match-set
+        # partition argument (loop length 0 vs >= 1) is order-free, so
+        # one state row runs them side by side and sums — see
+        # zero_or_more_stepper
         if loop_pat._family() != "fork_loop":
             raise NotImplementedError(
                 "streaming zeroOrMore carries the bounded fork-loop "
                 "shape only — final relaxed one_or_more().optional() "
                 "under within(d) + no_skip()")
         xp = loop_pat._expanded()
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(xp, event_col).alias("__m"))
-        zkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        Kz = len(xp.stages)
-        u_sql = xp.stages[-1].until_sql
-        ub = (0 if u_sql is None
-              else 1 << (_cond_codes(xp)[("__until__", u_sql)] - 1))
+        K = len(xp.stages)
+        proj = _masked(sdf, xp, keys, time_col, tiebreak_col, event_col)
         fn = zero_or_more_stepper(_stage_bits(xp), xp.within_us,
                                   _strict_flags(xp), key_cols=keys,
-                                  until_bit=ub)
-        state_schema = ("cnt long, "
-                        + ", ".join([f"s{i} array<long>"
-                                     for i in range(1, Kz)]
-                                    + ["lp array<long>"]
-                                    + [f"p{i} array<long>"
-                                       for i in range(1, Kz - 1)]))
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{zkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if pat._has_opt_range():
-        # r10: streaming optional()/times(a, b) — the batch union-of-
-        # variants argument carries to streams (the variants are
-        # independent fork machines; counts sum), so run all <=32
-        # variant steppers side by side on ONE keyed state row. The
-        # batch gates apply identically: no_skip only, no
-        # not_followed_by, no where_rel, no strict next() (these all
-        # raise inside _variants or here, same messages as batch).
-        if pat._has_rel() or pat._has_agg():
-            raise NotImplementedError(
-                "where_rel()/where_agg() with optional()/times(a, b) "
-                "is not compiled — the variant union runs on the "
-                "forking machines, which carry no per-anchor payloads")
-        if pat.skip != "no_skip":
-            raise NotImplementedError(
-                "optional()/times(a, b) compile only under no_skip(): "
-                "Flink's NFA keeps both quantifier branches as "
-                "distinct matches there; under skip-past-last the "
-                "branches compete for event consumption — drop the "
-                "quantifier or call no_skip()")
-        if any(s.contiguity == "not_followed_by" for s in pat.stages):
-            raise NotImplementedError(
-                "optional()/times(a, b) with not_followed_by stages "
-                "is not compiled — split the absence check out")
-        variants = _variants(pat)
+                                  until_bit=_until_bit(xp))
+        state = _sets_schema(K, "lp array<long>",
+                             *[f"p{i} array<long>" for i in range(1, K - 1)])
+    elif variants is not None:
+        # r10/r13: streaming optional()/times(a, b), stage or group —
+        # the batch union-of-variants argument is ORDER-FREE (fixed
+        # variants with disjoint binding shapes sum per key), so all
+        # <=32 variant steppers run side by side on ONE keyed state row
         codes = _cond_codes(pat)
         bits = [[1 << (codes[s.cond_key()] - 1) for s in v.stages]
                 for v in variants]
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(pat, event_col).alias("__m"))
-        vkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        state_schema = "cnt long" + "".join(
+        proj = _masked(sdf, pat, keys, time_col, tiebreak_col, event_col)
+        state = "cnt long" + "".join(
             f", v{vi}s{i} array<long>"
             for vi, b in enumerate(bits) for i in range(1, len(b)))
         fn = variant_union_stepper(bits, pat.within_us, key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{vkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if getattr(pat, "_gvar", None) is not None:
-        # streaming GROUP optional()/times(a, b) (r13 — replaces the
-        # r12 batch-only refusal): the batch variant-union argument is
-        # ORDER-FREE (fixed variants with disjoint binding shapes sum
-        # per key), so the stage-level variant_union_stepper carries
-        # the group variants verbatim — only variant CONSTRUCTION
-        # differs, and that is the shared _gvar_variants helper.
-        pat._family()   # the shared group gates (tail/no_skip/...)
-        variants = _gvar_variants(pat)
-        codes = _cond_codes(pat)
-        bits = [[1 << (codes[s.cond_key()] - 1) for s in v.stages]
-                for v in variants]
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(pat, event_col).alias("__m"))
-        gkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        state_schema = "cnt long" + "".join(
-            f", v{vi}s{i} array<long>"
-            for vi, b in enumerate(bits) for i in range(1, len(b)))
-        fn = variant_union_stepper(bits, pat.within_us, key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{gkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if getattr(pat, "_gzom", None) is not None:
+    elif getattr(pat, "_gzom", None) is not None:
         # streaming GROUP zeroOrMore (r13): prefix-only + back-edge
         # loop addends run side by side in one state row — see
         # group_zom_stepper for the sum-of-machines argument.
         pat._family()   # the shared group gates (within required)
         lo, hi = pat._gzom
         bits = _stage_bits(pat)
-        K = len(bits)
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(pat, event_col).alias("__m"))
-        zkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        state_schema = ("cnt long"
-                        + "".join(f", s{i} array<long>"
-                                  for i in range(1, K))
-                        + "".join(f", p{i} array<long>"
-                                  for i in range(1, lo)))
+        proj = _masked(sdf, pat, keys, time_col, tiebreak_col, event_col)
+        state = ("cnt long"
+                 + "".join(f", s{i} array<long>"
+                           for i in range(1, len(bits)))
+                 + "".join(f", p{i} array<long>" for i in range(1, lo)))
         fn = group_zom_stepper(bits, hi - lo, pat.within_us,
                                key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{zkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    fam = pat._family()
-    if fam == "skip_strategy":
-        # r10: streaming AfterMatchSkipStrategy counts — the closing
-        # events arrive in exactly the batch prune's candidate order,
-        # so the kill-interval prune runs inline in the stepper
-        xp = pat._expanded()
-        jn = None
-        if pat.skip in ("to_first", "to_last"):
-            base = [s.name.split("#")[0] for s in xp.stages]
-            idx = [i for i, b in enumerate(base) if b == pat.skip_ref]
-            jn = idx[0] if pat.skip == "to_first" else idx[-1]
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(xp, event_col).alias("__m"))
-        skey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        K = len(xp.stages)
-        state_schema = ("cnt long, rn long, klo array<long>, "
-                        "khi array<long>" + "".join(
-                            f", s{i}t array<long>, s{i}i array<long>"
-                            f", s{i}r array<long>, s{i}n array<long>"
-                            for i in range(1, K)))
-        fn = skip_strategy_stepper(_stage_bits(xp), pat.skip, jn,
-                                   xp.within_us, key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{skey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if fam not in ("relaxed", "relaxed_within", "fork", "fork_loop",
-                   "fork_group_loop", "absence", "absence_chain",
-                   "strict", "any_dp", "any_dp_within"):
-        raise NotImplementedError(
-            "streaming pattern() carries the relaxed followed_by "
-            "machines (skip-past-last, bounded, no_skip, bounded "
-            "one_or_more incl. looping groups), followed_by_any "
-            "(counting DP), strict chains (KMP), timer-driven absence "
-            "(2-stage and anchored-chain), and the skip_to_* "
-            "strategies")
-    if pat._has_agg() and fam == "fork_loop":
-        # r11: streaming twin of _fork_loop_agg_machine — parked runs
-        # carry (t, register, loop length) in parallel arrays
-        if pat._has_rel() or any(
-                s.agg is not None for s in pat.stages[:-1]):
-            raise NotImplementedError(
-                "loop patterns carry where_agg() on the LOOP stage "
-                "only (aggregate over the loop's accepted events)")
-        if len(pat.stages) < 2:
-            raise NotImplementedError(
-                "where_agg() on a 1-stage loop is not compiled — "
-                "anchor it with a prefix stage")
-        if pat.stages[-1].consec:
-            raise NotImplementedError(
-                "consecutive() with where_agg() on the loop is not "
-                "compiled — the strict-internal kill rule is carried "
-                "by the plain loop (drop where_agg) and the "
-                "run-aggregate by the relaxed loop (drop consecutive)")
-        if pat.stages[-1].combos:
-            raise NotImplementedError(
-                "allow_combinations() with where_agg() on the loop "
-                "is not compiled — per-SUBSEQUENCE aggregate "
-                "registers would be the enumeration itself; drop one "
-                "of the modifiers")
-        xp = pat._expanded()
-        agg = xp.stages[-1].agg
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(xp, event_col).alias("__m"),
-                          F.col(agg[1]).cast("double").alias("__v"))
-        lkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        Kl = len(xp.stages)
-        u_sql = xp.stages[-1].until_sql
-        ub = (0 if u_sql is None
-              else 1 << (_cond_codes(xp)[("__until__", u_sql)] - 1))
-        fn = fork_loop_agg_stepper(_stage_bits(xp), agg,
-                                   xp.within_us, _strict_flags(xp),
-                                   key_cols=keys, until_bit=ub)
-        state_schema = ("cnt long, "
-                        + ", ".join([f"s{i} array<long>"
-                                     for i in range(1, Kl)]
-                                    + ["lp_t array<long>",
-                                       "lp_r array<double>",
-                                       "lp_n array<long>"]))
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{lkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if pat._has_agg() and fam not in ("relaxed", "relaxed_within"):
-        raise NotImplementedError(
-            "where_agg() streams only on the single-anchor "
-            "skip-past-last machines and, for the loop, the bounded "
-            "fork-loop shape — the other families would need per-run "
-            "aggregate payloads")
-    if pat._has_rel() and fam == "fork":
-        # r10: streaming where_rel on the forking family — the
-        # keyed-state twin of _fork_rel_machine (per-anchor payloads
-        # as parallel t/value arrays in the state row)
-        xp = pat._expanded()
-        if any(_strict_flags(xp)) or _has_mid_nfb(xp) \
-                or any(s.contiguity == "not_followed_by"
-                       for s in xp.stages):
-            raise NotImplementedError(
-                "where_rel() under no_skip() streams on pure relaxed "
-                "followed_by chains only")
-        rels = [s.rel for s in xp.stages]
-        fsrcs = [s.rel_src for s in xp.stages]
-        if rels[0] is not None:
-            raise NotImplementedError(
-                "where_rel() on the begin stage is undefined")
-        acols = sorted({r[2] for r, sc in zip(rels, fsrcs)
-                        if r and sc == "anchor"})
-        pcols = sorted({r[2] for r, sc in zip(rels, fsrcs)
-                        if r and sc == "prev"})
-        vcols = sorted({r[0] for r in rels if r} | set(acols)
-                       | set(pcols))
-        proj = sdf.select(
-            *keys, time_col, tiebreak_col,
-            _cond_mask_col(xp, event_col).alias("__m"),
-            *[F.col(c).cast("double").alias(f"__v_{c}")
-              for c in vcols])
-        fkey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        K = len(xp.stages)
-        state_schema = "cnt long" + "".join(
-            f", s{i}t array<long>" + "".join(
-                f", s{i}v{j} array<double>" for j in range(len(acols)))
-            + "".join(
-                f", s{i}p{j} array<double>" for j in range(len(pcols)))
-            for i in range(1, K))
-        fn = fork_rel_stepper(_stage_bits(xp), rels, acols, vcols,
-                              xp.within_us, key_cols=keys,
-                              srcs=fsrcs, pcols=pcols)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{fkey_schema}, n_matches long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if pat._has_rel() and fam not in ("relaxed", "relaxed_within"):
-        raise NotImplementedError(
-            "where_rel() streams only on the single-anchor "
-            "skip-past-last machines and, since round 10, the "
-            "forking no_skip() family — drop followed_by_any/"
-            "not_followed_by or the relative condition")
-    if fam == "strict":
-        # Fixed-string chains (next-chains; times(n) expands to one)
-        # run on the KMP failure-function automaton (r9): O(K) state,
-        # O(1)/event, equal to the batch regex's leftmost
-        # non-overlapping count for ANY stage string — repeated types
-        # (login→login→alert) included; the r8 kill-or-re-anchor
-        # stepper was the fail<=1 special case of this machine and
-        # needed a distinct alphabet. Only one_or_more (variable-length
-        # greedy) genuinely needs backtracking and stays batch-side.
-        if any(s.one_or_more for s in pat.stages):
-            raise NotImplementedError(
-                "streaming strict chains do not carry one_or_more() "
-                "(unbounded backtracking); run in batch mode (the "
-                "regex path)")
-        _no_preds(pat, "streaming strict pattern()")
-        pat = pat._expanded()
-        proj = sdf.select(*keys, time_col, tiebreak_col, event_col)
-        key_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        fn = kmp_stepper(_type_codes(pat), _stage_codes(pat),
-                         key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{key_schema}, n_matches long, stage long",
-            stateStructType="cnt long, stage long",
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    # COMPOSITE keys supported [FLINK-API: keyBy(a, b)]: the steppers
-    # address columns positionally (keys first, then time, tiebreak,
-    # event CONDITION MASK — computed JVM-side by _cond_mask_col, so
-    # where()/or_where() predicates never run per-row Python) and echo
-    # every key column back by NAME
-    key_schema = ", ".join(
-        f"{k} {_key_sql_type(sdf, k)}" for k in keys)
-    if fam == "absence":
-        if pat._has_preds():
-            if pat.stages[0].cond_key() == pat.stages[1].cond_key():
-                raise NotImplementedError(
-                    "streaming absence with identical anchor and "
-                    "answer conditions is not compiled — run in "
-                    "batch mode (the anti-join handles it)")
-            proj = sdf.select(
-                *keys, time_col, tiebreak_col,
-                _cond_mask_col(pat, event_col).alias("__m"))
-            fn = absence_stepper("", "", pat.within_us,
-                                 key_cols=keys, mask_mode=True)
-        else:
-            proj = sdf.select(*keys, time_col, tiebreak_col, event_col)
-            fn = absence_stepper(pat.stages[0].event_type,
-                                 pat.stages[1].event_type,
-                                 pat.within_us, key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn, outputStructType=f"{key_schema}, anchor_id long",
-            stateStructType="t_arr array<long>, id_arr array<long>",
-            outputMode="Append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout)
-    if fam == "absence_chain":
-        # r10: streaming anchored-CHAIN absence — the batch composition
-        # (prefix match extraction anti-joined over the band) becomes
-        # ONE stepper: the relaxed skip-past-last extraction automaton
-        # fused with the 2-stage timer machinery, deadline armed per
-        # extracted prefix match (see chain_absence_stepper)
-        if pat.skip == "no_skip":
-            raise NotImplementedError(
-                "streaming anchored-chain absence carries the "
-                "skip-past-last prefix only — a noSkip prefix forks "
-                "overlapping matches whose pending deadlines would "
-                "need per-run payloads; run in batch mode (the "
-                "composition handles it)")
-        if any(s.contiguity == "not_followed_by"
-               for s in pat.stages[:-1]):
-            raise NotImplementedError(
-                "streaming anchored-chain absence with a mid-pattern "
-                "not_followed_by is not compiled — run in batch mode")
-        xpat = pat._expanded()
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(xpat, event_col).alias("__m"))
-        codes = _cond_codes(xpat)
-        b_bit = 1 << (codes[xpat.stages[-1].cond_key()] - 1)
-        fn = chain_absence_stepper(
-            _stage_bits(xpat), b_bit, xpat.within_us,
-            _strict_flags(xpat), key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn, outputStructType=f"{key_schema}, anchor_id long",
-            stateStructType="stage long, aid long, at long, "
-                            "a_t array<long>, a_id array<long>, "
-                            "e_t array<long>",
-            outputMode="Append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout)
-    pat = pat._expanded()
-    if pat._has_rel() or pat._has_agg():
-        awaits = _await_stages(pat)
-        rels = [s.rel for s in awaits]
-        aggs = [s.agg for s in awaits]
-        if rels[0] is not None:
-            raise NotImplementedError(
-                "where_rel() on the begin stage is undefined")
-        if aggs[0] is not None:
-            raise NotImplementedError(
-                "where_agg() on the begin stage is undefined")
-        vcols = sorted({r[0] for r in rels if r}
-                       | {r[2] for r in rels if r}
-                       | {a[1] for a in aggs if a})
-        nreg = (len({a[1] for a in aggs
-                     if a and a[0] in ("sum", "avg")})
-                + len({a[1] for a in aggs if a and a[0] == "min"})
-                + len({a[1] for a in aggs if a and a[0] == "max"}))
-        proj = sdf.select(
-            *keys, time_col, tiebreak_col,
-            _cond_mask_col(pat, event_col).alias("__m"),
-            *[F.col(c).cast("double").alias(f"__v_{c}")
-              for c in vcols])
-        fn = relaxed_rel_stepper(_stage_bits(pat), rels, vcols,
-                                 pat.within_us, _strict_flags(pat),
-                                 key_cols=keys,
-                                 veto=_veto_codes(pat),
-                                 srcs=[s.rel_src for s in awaits],
-                                 aggs=aggs)
-        state_schema = ("cnt long, stage long, anchor long"
-                        + "".join(f", av{i} double"
-                                  for i in range(len(vcols)))
-                        + "".join(f", pv{i} double"
-                                  for i in range(len(vcols)))
-                        + "".join(f", rg{i} double"
-                                  for i in range(nreg)))
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{key_schema}, n_matches long, "
-                             "stage long",
-            stateStructType=state_schema,
-            outputMode="Update",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    proj = sdf.select(*keys, time_col, tiebreak_col,
-                      _cond_mask_col(pat, event_col).alias("__m"))
-    tcodes = None  # the mask column IS the per-event condition word
-    scodes = _stage_bits(pat)
-    K = len(scodes)  # awaits only — mid-pattern NFB stages are vetoes
-    sflags = _strict_flags(pat)
-    vcodes = _veto_codes(pat)
-    if fam == "any_dp":
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = ", ".join(f"c{i} long" for i in range(1, K + 1))
-        fn = any_dp_stepper(scodes, key_cols=keys)
-    elif fam == "any_dp_within":
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = "cnt long, t array<long>, " + ", ".join(
-            f"n{j} array<long>" for j in range(K - 1))
-        fn = any_table_stepper(scodes, pat.within_us, key_cols=keys)
-    elif fam == "relaxed":
-        out_schema = f"{key_schema}, n_matches long, stage long"
-        state_schema = "cnt long, stage long"
-        fn = relaxed_stepper(tcodes, scodes, sflags, key_cols=keys,
-                             veto=vcodes)
-    elif fam == "relaxed_within":
-        out_schema = f"{key_schema}, n_matches long, stage long"
-        state_schema = "cnt long, stage long, anchor long"
-        fn = relaxed_within_stepper(tcodes, scodes, pat.within_us,
-                                    sflags, key_cols=keys,
-                                    veto=vcodes)
-    elif fam == "fork_group_loop":
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = "cnt long, " + ", ".join(
-            f"s{i} array<long>" for i in range(1, K))
-        glo, ghi = pat._gloop
-        fn = fork_group_loop_stepper(scodes, ghi - glo,
-                                     pat.within_us, key_cols=keys)
-    elif fam == "fork_loop" and pat.stages[-1].combos:
-        if len(pat.stages) < 2:
-            raise NotImplementedError(
-                "allow_combinations() on a 1-stage loop is not "
-                "compiled — anchor it with a prefix stage")
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = "cnt long, " + ", ".join(
-            [f"s{i} array<long>" for i in range(1, K)]
-            + ["lp_t array<long>", "lp_c array<long>"])
-        u_sql = pat.stages[-1].until_sql
-        ub = (0 if u_sql is None
-              else 1 << (_cond_codes(pat)[("__until__", u_sql)] - 1))
-        fn = fork_loop_combos_stepper(scodes, pat.within_us, sflags,
-                                      key_cols=keys, until_bit=ub)
-    elif fam == "fork_loop":
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = "cnt long, " + ", ".join(
-            [f"s{i} array<long>" for i in range(1, K)]
-            + ["lp array<long>"])
-        u_sql = pat.stages[-1].until_sql
-        ub = (0 if u_sql is None
-              else 1 << (_cond_codes(pat)[("__until__", u_sql)] - 1))
-        fn = fork_loop_stepper(tcodes, scodes, pat.within_us, sflags,
-                               key_cols=keys, until_bit=ub,
-                               consec=pat.stages[-1].consec)
     else:
-        out_schema = f"{key_schema}, n_matches long"
-        state_schema = "cnt long, " + ", ".join(
-            f"s{i} array<long>" for i in range(1, K))
-        fn = fork_stepper(tcodes, scodes, pat.within_us, sflags,
-                          key_cols=keys, veto=vcodes)
+        fam = pat._family()
+        if fam not in ("relaxed", "relaxed_within", "fork", "fork_loop",
+                       "fork_group_loop", "absence", "absence_chain",
+                       "strict", "any_dp", "any_dp_within",
+                       "skip_strategy"):
+            raise NotImplementedError(
+                "streaming pattern() carries the relaxed followed_by "
+                "machines (skip-past-last, bounded, no_skip, bounded "
+                "one_or_more incl. looping groups), followed_by_any "
+                "(counting DP), strict chains (KMP), timer-driven "
+                "absence (2-stage and anchored-chain), and the "
+                "skip_to_* strategies")
+        payload = _payload_machine(pat, fam)
+        xp = pat._expanded()
+        K = len(xp.stages)
+        if fam == "skip_strategy":
+            # r10: streaming AfterMatchSkipStrategy counts — the
+            # closing events arrive in exactly the batch prune's
+            # candidate order, so the kill-interval prune runs inline
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col)
+            state = _skip_state_schema(K)
+            fn = skip_strategy_stepper(_stage_bits(xp), pat.skip,
+                                       _skip_ref_index(pat),
+                                       xp.within_us, key_cols=keys)
+        elif payload == "loop_agg":
+            # r11: streaming twin of _fork_loop_agg_machine — parked
+            # runs carry (t, register, loop length) in parallel arrays
+            agg = xp.stages[-1].agg
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col,
+                           F.col(agg[1]).cast("double").alias("__v"))
+            fn = fork_loop_agg_stepper(_stage_bits(xp), agg,
+                                       xp.within_us, _strict_flags(xp),
+                                       key_cols=keys,
+                                       until_bit=_until_bit(xp))
+            state = _sets_schema(K, "lp_t array<long>",
+                                 "lp_r array<double>", "lp_n array<long>")
+        elif payload == "fork_rel":
+            # r10: streaming where_rel on the forking family — the
+            # keyed-state twin of _fork_rel_machine (per-anchor payloads
+            # as parallel t/value arrays in the state row)
+            rels = [s.rel for s in xp.stages]
+            fsrcs = [s.rel_src for s in xp.stages]
+            acols = sorted({r[2] for r, sc in zip(rels, fsrcs)
+                            if r and sc == "anchor"})
+            pcols = sorted({r[2] for r, sc in zip(rels, fsrcs)
+                            if r and sc == "prev"})
+            vcols = sorted({r[0] for r in rels if r} | set(acols)
+                           | set(pcols))
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col,
+                           *[F.col(c).cast("double").alias(f"__v_{c}")
+                             for c in vcols])
+            state = "cnt long" + "".join(
+                f", s{i}t array<long>" + "".join(
+                    f", s{i}v{j} array<double>"
+                    for j in range(len(acols)))
+                + "".join(
+                    f", s{i}p{j} array<double>"
+                    for j in range(len(pcols)))
+                for i in range(1, K))
+            fn = fork_rel_stepper(_stage_bits(xp), rels, acols, vcols,
+                                  xp.within_us, key_cols=keys,
+                                  srcs=fsrcs, pcols=pcols)
+        elif payload == "relaxed_rel":
+            awaits = _await_stages(xp)
+            rels = [s.rel for s in awaits]
+            aggs = [s.agg for s in awaits]
+            vcols = sorted({r[0] for r in rels if r}
+                           | {r[2] for r in rels if r}
+                           | {a[1] for a in aggs if a})
+            nreg = (len({a[1] for a in aggs
+                         if a and a[0] in ("sum", "avg")})
+                    + len({a[1] for a in aggs if a and a[0] == "min"})
+                    + len({a[1] for a in aggs if a and a[0] == "max"}))
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col,
+                           *[F.col(c).cast("double").alias(f"__v_{c}")
+                             for c in vcols])
+            fn = relaxed_rel_stepper(_stage_bits(xp), rels, vcols,
+                                     xp.within_us, _strict_flags(xp),
+                                     key_cols=keys,
+                                     veto=_veto_codes(xp),
+                                     srcs=[s.rel_src for s in awaits],
+                                     aggs=aggs)
+            out_cols = "n_matches long, stage long"
+            state = ("cnt long, stage long, anchor long"
+                     + "".join(f", av{i} double"
+                               for i in range(len(vcols)))
+                     + "".join(f", pv{i} double"
+                               for i in range(len(vcols)))
+                     + "".join(f", rg{i} double" for i in range(nreg)))
+        elif fam == "strict":
+            # Fixed-string chains (next-chains; times(n) expands to
+            # one) run on the KMP failure-function automaton (r9): O(K)
+            # state, O(1)/event, equal to the batch regex's leftmost
+            # non-overlapping count for ANY stage string — repeated
+            # types (login→login→alert) included. Only one_or_more
+            # (variable-length greedy) genuinely needs backtracking and
+            # stays batch-side.
+            if any(s.one_or_more for s in pat.stages):
+                raise NotImplementedError(
+                    "streaming strict chains do not carry one_or_more() "
+                    "(unbounded backtracking); run in batch mode (the "
+                    "regex path)")
+            _no_preds(pat, "streaming strict pattern()")
+            proj = sdf.select(*keys, time_col, tiebreak_col, event_col)
+            fn = kmp_stepper(_type_codes(xp), _stage_codes(xp),
+                             key_cols=keys)
+            out_cols = "n_matches long, stage long"
+            state = "cnt long, stage long"
+        elif fam == "absence":
+            if pat._has_preds():
+                if pat.stages[0].cond_key() == pat.stages[1].cond_key():
+                    raise NotImplementedError(
+                        "streaming absence with identical anchor and "
+                        "answer conditions is not compiled — run in "
+                        "batch mode (the anti-join handles it)")
+                proj = _masked(sdf, pat, keys, time_col, tiebreak_col,
+                               event_col)
+                fn = absence_stepper("", "", pat.within_us,
+                                     key_cols=keys, mask_mode=True)
+            else:
+                proj = sdf.select(*keys, time_col, tiebreak_col,
+                                  event_col)
+                fn = absence_stepper(pat.stages[0].event_type,
+                                     pat.stages[1].event_type,
+                                     pat.within_us, key_cols=keys)
+            out_cols = "anchor_id long"
+            state = "t_arr array<long>, id_arr array<long>"
+            mode, timeout = "Append", GroupStateTimeout.EventTimeTimeout
+        elif fam == "absence_chain":
+            # r10: streaming anchored-CHAIN absence — the batch
+            # composition (prefix match extraction anti-joined over the
+            # band) becomes ONE stepper: the relaxed skip-past-last
+            # extraction automaton fused with the 2-stage timer
+            # machinery, deadline armed per extracted prefix match (see
+            # chain_absence_stepper)
+            if pat.skip == "no_skip":
+                raise NotImplementedError(
+                    "streaming anchored-chain absence carries the "
+                    "skip-past-last prefix only — a noSkip prefix forks "
+                    "overlapping matches whose pending deadlines would "
+                    "need per-run payloads; run in batch mode (the "
+                    "composition handles it)")
+            if _has_mid_nfb(pat):
+                raise NotImplementedError(
+                    "streaming anchored-chain absence with a mid-pattern "
+                    "not_followed_by is not compiled — run in batch mode")
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col)
+            b_bit = 1 << (_cond_codes(xp)[xp.stages[-1].cond_key()] - 1)
+            fn = chain_absence_stepper(
+                _stage_bits(xp), b_bit, xp.within_us,
+                _strict_flags(xp), key_cols=keys)
+            out_cols = "anchor_id long"
+            state = ("stage long, aid long, at long, a_t array<long>, "
+                     "a_id array<long>, e_t array<long>")
+            mode, timeout = "Append", GroupStateTimeout.EventTimeTimeout
+        else:
+            proj = _masked(sdf, xp, keys, time_col, tiebreak_col,
+                           event_col)
+            scodes = _stage_bits(xp)
+            K = len(scodes)  # awaits only — mid-pattern NFB stages veto
+            sflags = _strict_flags(xp)
+            vcodes = _veto_codes(xp)
+            w = xp.within_us
+            if fam == "any_dp":
+                state = ", ".join(f"c{i} long" for i in range(1, K + 1))
+                fn = any_dp_stepper(scodes, key_cols=keys)
+            elif fam == "any_dp_within":
+                state = "cnt long, t array<long>, " + ", ".join(
+                    f"n{j} array<long>" for j in range(K - 1))
+                fn = any_table_stepper(scodes, w, key_cols=keys)
+            elif fam == "relaxed":
+                out_cols = "n_matches long, stage long"
+                state = "cnt long, stage long"
+                fn = relaxed_stepper(None, scodes, sflags, key_cols=keys,
+                                     veto=vcodes)
+            elif fam == "relaxed_within":
+                out_cols = "n_matches long, stage long"
+                state = "cnt long, stage long, anchor long"
+                fn = relaxed_within_stepper(None, scodes, w, sflags,
+                                            key_cols=keys, veto=vcodes)
+            elif fam == "fork_group_loop":
+                state = _sets_schema(K)
+                glo, ghi = xp._gloop
+                fn = fork_group_loop_stepper(scodes, ghi - glo, w,
+                                             key_cols=keys)
+            elif fam == "fork_loop" and xp.stages[-1].combos:
+                _refuse_one_stage_combos(xp)
+                state = _sets_schema(K, "lp_t array<long>",
+                                     "lp_c array<long>")
+                fn = fork_loop_combos_stepper(scodes, w, sflags,
+                                              key_cols=keys,
+                                              until_bit=_until_bit(xp))
+            elif fam == "fork_loop":
+                state = _sets_schema(K, "lp array<long>")
+                fn = fork_loop_stepper(None, scodes, w, sflags,
+                                       key_cols=keys,
+                                       until_bit=_until_bit(xp),
+                                       consec=xp.stages[-1].consec)
+            else:
+                state = _sets_schema(K)
+                fn = fork_stepper(None, scodes, w, sflags, key_cols=keys,
+                                  veto=vcodes)
     return proj.groupBy(*keys).applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="Update", timeoutConf=GroupStateTimeout.NoTimeout)
+        fn, outputStructType=f"{_key_schema(sdf, keys)}, {out_cols}",
+        stateStructType=state, outputMode=mode, timeoutConf=timeout)
 
 
 def compile_pattern_timeouts_stream(pat: Pattern, sdf: DataFrame,
@@ -6610,45 +6401,18 @@ def compile_pattern_timeouts_stream(pat: Pattern, sdf: DataFrame,
                                     event_col: str) -> DataFrame:
     """Streaming twin of compile_pattern_timeouts — append-mode
     timed-out-partial rows, emitted on event-observed expiry or
-    watermark-passed deadlines (timer). Gates mirror batch."""
+    watermark-passed deadlines (timer). Same gates as batch
+    (_timeouts_gates)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if pat.within_us is None:
-        raise ValueError(
-            "pattern_timeouts() needs within(): without a horizon no "
-            "partial match ever times out")
-    if pat.skip == "no_skip":
-        raise NotImplementedError(
-            "pattern_timeouts() carries the single-anchor "
-            "skip-past-last machine only — drop no_skip()")
-    if pat._has_rel() or pat._has_agg():
-        raise NotImplementedError(
-            "where_rel()/where_agg() carries counts only (pattern()) "
-            "— timeout extraction with run-dependent conditions is "
-            "not compiled")
-    if pat._has_opt_range() or any(s.one_or_more for s in pat.stages):
-        raise NotImplementedError(
-            "pattern_timeouts() carries fixed relaxed/mixed chains "
-            "(times(n) expands) — quantifier branches have no single "
-            "partial binding to time out")
-    if pat.stages and pat.stages[-1].contiguity in (
-            "not_followed_by", "not_next"):
-        raise NotImplementedError(
-            "absence patterns ARE the timeout output — use pattern()")
-    xp = pat._expanded()
-    if len(xp.stages) < 2:
-        raise ValueError("pattern_timeouts() needs at least two "
-                         "stages after quantifier expansion")
-    proj = sdf.select(*keys, time_col, tiebreak_col,
-                      _cond_mask_col(xp, event_col).alias("__m"))
-    key_schema = ", ".join(
-        f"{k} {_key_sql_type(proj, k)}" for k in keys)
+    xp = _timeouts_gates(pat)
+    proj = _masked(sdf, xp, keys, time_col, tiebreak_col, event_col)
     fn = timeout_stepper(_stage_bits(xp), xp.within_us,
                          _strict_flags(xp), key_cols=keys,
                          veto=_veto_codes(xp))
     return proj.groupBy(*keys).applyInPandasWithState(
         fn,
-        outputStructType=f"{key_schema}, anchor_id long, "
+        outputStructType=f"{_key_schema(sdf, keys)}, anchor_id long, "
                          "stages_matched long, timeout_at_us long",
         stateStructType="stage long, aid long, at long",
         outputMode="Append",
@@ -6665,139 +6429,60 @@ def compile_pattern_matches_stream(pat: Pattern, sdf: DataFrame,
     (key, match_no, start_event_id, end_event_id, span_us) — so a match
     whose anchor arrived three micro-batches ago still emits exact
     bindings. Append output mode: each match is emitted exactly once;
-    the accumulated sink equals the batch compile_pattern_matches."""
+    the accumulated sink equals the batch compile_pattern_matches.
+    Same gates as batch (_matches_gates) — so an until() pattern can
+    never reach a stepper that ignores its stop condition."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    if pat._has_opt_range():
-        raise NotImplementedError(
-            "optional()/times(a, b) compile only through batch "
-            "pattern() (union-of-variants counting); match extraction "
-            "and streaming are not carried — use fixed times(n) or "
-            "drop the quantifier")
-    if pat._has_rel() or pat._has_agg():
-        raise NotImplementedError(
-            "where_rel()/where_agg() carries counts only (pattern()) "
-            "— match extraction with run-dependent conditions is not "
-            "compiled")
-    if any(s.combos for s in pat.stages):
-        raise NotImplementedError(
-            "allow_combinations() carries counts only (pattern()) — "
-            "binding extraction would enumerate the 2^m subsequences "
-            "the counting register exists to avoid")
-    fam = pat._family()
-    if any(s.until_sql or s.consec for s in pat.stages) \
-            and fam != "fork_loop":
-        # r13: mirrors the batch gate — kills ride the fork-loop
-        # stepper only (previously an until() pattern reaching the
-        # fork_loop stepper silently dropped the stop condition)
-        raise NotImplementedError(
-            "until()/consecutive() binding extraction compiles on "
-            "the bounded fork-loop shape only (final one_or_more + "
-            "within + no_skip) — use pattern() for counts elsewhere")
+    fam, xp = _matches_gates(pat)
+    K = len(xp.stages)
+    sflags = _strict_flags(xp)
     if fam == "skip_strategy":
-        # r11 (replaces divergences row 15's remaining refusal): the
-        # counts stepper already runs the kill-interval prune inline
-        # and survivals happen in exactly the batch prune's candidate
-        # order — so bindings emission is the same stepper in append
-        # mode, one row per surviving candidate
-        xp = pat._expanded()
-        jn = None
-        if pat.skip in ("to_first", "to_last"):
-            base = [s.name.split("#")[0] for s in xp.stages]
-            idx = [i for i, b in enumerate(base) if b == pat.skip_ref]
-            jn = idx[0] if pat.skip == "to_first" else idx[-1]
-        proj = sdf.select(*keys, time_col, tiebreak_col,
-                          _cond_mask_col(xp, event_col).alias("__m"))
-        skey_schema = ", ".join(
-            f"{k} {_key_sql_type(proj, k)}" for k in keys)
-        Ks = len(xp.stages)
-        state_schema = ("cnt long, rn long, klo array<long>, "
-                        "khi array<long>" + "".join(
-                            f", s{i}t array<long>, s{i}i array<long>"
-                            f", s{i}r array<long>, s{i}n array<long>"
-                            for i in range(1, Ks)))
-        fn = skip_strategy_stepper(_stage_bits(xp), pat.skip, jn,
-                                   xp.within_us, key_cols=keys,
-                                   bindings=True)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn,
-            outputStructType=f"{skey_schema}, match_no long, "
-                             "start_event_id long, end_event_id long, "
-                             "span_us long",
-            stateStructType=state_schema,
-            outputMode="Append",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    if fam not in ("relaxed", "relaxed_within", "fork", "fork_loop",
-                   "strict"):
-        raise NotImplementedError(
-            "streaming pattern_matches() carries the relaxed "
-            "followed_by machines (skip-past-last, bounded, no_skip, "
-            "bounded one_or_more), fixed strict chains, and the "
-            "skip_to_* strategies")
-    if fam == "strict" and any(s.one_or_more for s in pat.stages):
-        raise NotImplementedError(
-            "strict-chain match extraction carries FIXED strings "
-            "(next chains and times(n)); one_or_more is variable-"
-            "length — use pattern() for its count (the regex path)")
-    if _has_mid_nfb(pat):
-        raise NotImplementedError(
-            "mid-pattern not_followed_by match extraction is not "
-            "compiled — use pattern() for its count (the veto "
-            "machines)")
-    # expand FIRST so begin(a).times(3) (1 written stage, 3 expanded)
-    # compiles here exactly as it does under pattern()
-    pat = pat._expanded()
-    if len(pat.stages) < 2:
-        raise ValueError("pattern_matches() needs at least two stages "
-                         "after quantifier expansion (a single-stage "
-                         "pattern is a filter)")
-    K = len(pat.stages)
-    sflags = _strict_flags(pat)
-    key_schema = ", ".join(
-        f"{k} {_key_sql_type(sdf, k)}" for k in keys)
-    out_schema = (f"{key_schema}, match_no long, start_event_id long, "
-                  f"end_event_id long, span_us long")
-    if fam == "strict":
-        _no_preds(pat, "streaming strict pattern_matches()")
+        # r11: the counts stepper already runs the kill-interval prune
+        # inline and survivals happen in exactly the batch prune's
+        # candidate order — so bindings emission is the same stepper
+        # in append mode, one row per surviving candidate
+        proj = _masked(sdf, xp, keys, time_col, tiebreak_col, event_col)
+        state = _skip_state_schema(K)
+        fn = skip_strategy_stepper(_stage_bits(xp), pat.skip,
+                                   _skip_ref_index(pat), xp.within_us,
+                                   key_cols=keys, bindings=True)
+    elif fam == "strict":
+        _no_preds(xp, "streaming strict pattern_matches()")
         proj = sdf.select(*keys, time_col, tiebreak_col, event_col)
-        state_schema = ("cnt long, stage long, buf_t array<long>, "
-                        "buf_id array<long>")
-        fn = kmp_matches_stepper(_type_codes(pat), _stage_codes(pat),
+        state = ("cnt long, stage long, buf_t array<long>, "
+                 "buf_id array<long>")
+        fn = kmp_matches_stepper(_type_codes(xp), _stage_codes(xp),
                                  key_cols=keys)
-        return proj.groupBy(*keys).applyInPandasWithState(
-            fn, outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="Append",
-            timeoutConf=GroupStateTimeout.NoTimeout)
-    # relaxed family: the mask column carries the (possibly
-    # predicate-refined, possibly overlapping) stage conditions
-    proj = sdf.select(*keys, time_col, tiebreak_col,
-                      _cond_mask_col(pat, event_col).alias("__m"))
-    tcodes = None
-    scodes = _stage_bits(pat)
-    if fam == "fork_loop":
-        state_schema = "cnt long, " + ", ".join(
-            [f"s{i}_t array<long>, s{i}_id array<long>"
-             for i in range(1, K)]
-            + ["lp_t array<long>", "lp_id array<long>"])
-        u_sql = pat.stages[-1].until_sql
-        ub = (0 if u_sql is None
-              else 1 << (_cond_codes(pat)[("__until__", u_sql)] - 1))
-        fn = fork_loop_matches_stepper(tcodes, scodes, pat.within_us,
-                                       sflags, key_cols=keys,
-                                       until_bit=ub,
-                                       consec=pat.stages[-1].consec)
-    elif fam == "fork":
-        state_schema = "cnt long, " + ", ".join(
-            f"s{i}_t array<long>, s{i}_id array<long>"
-            for i in range(1, K))
-        fn = fork_matches_stepper(tcodes, scodes, pat.within_us,
-                                  sflags, key_cols=keys)
     else:
-        state_schema = ("cnt long, stage long, anchor_id long, "
-                        "anchor_t long")
-        fn = relaxed_matches_stepper(tcodes, scodes, pat.within_us,
-                                     sflags, key_cols=keys)
+        # relaxed family: the mask column carries the (possibly
+        # predicate-refined, possibly overlapping) stage conditions
+        proj = _masked(sdf, xp, keys, time_col, tiebreak_col, event_col)
+        scodes = _stage_bits(xp)
+        if fam == "fork_loop":
+            state = "cnt long, " + ", ".join(
+                [f"s{i}_t array<long>, s{i}_id array<long>"
+                 for i in range(1, K)]
+                + ["lp_t array<long>", "lp_id array<long>"])
+            fn = fork_loop_matches_stepper(None, scodes, xp.within_us,
+                                           sflags, key_cols=keys,
+                                           until_bit=_until_bit(xp),
+                                           consec=xp.stages[-1].consec)
+        elif fam == "fork":
+            state = "cnt long, " + ", ".join(
+                f"s{i}_t array<long>, s{i}_id array<long>"
+                for i in range(1, K))
+            fn = fork_matches_stepper(None, scodes, xp.within_us,
+                                      sflags, key_cols=keys)
+        else:
+            state = ("cnt long, stage long, anchor_id long, "
+                     "anchor_t long")
+            fn = relaxed_matches_stepper(None, scodes, xp.within_us,
+                                         sflags, key_cols=keys)
     return proj.groupBy(*keys).applyInPandasWithState(
-        fn, outputStructType=out_schema, stateStructType=state_schema,
-        outputMode="Append", timeoutConf=GroupStateTimeout.NoTimeout)
+        fn,
+        outputStructType=f"{_key_schema(sdf, keys)}, match_no long, "
+                         "start_event_id long, end_event_id long, "
+                         "span_us long",
+        stateStructType=state, outputMode="Append",
+        timeoutConf=GroupStateTimeout.NoTimeout)

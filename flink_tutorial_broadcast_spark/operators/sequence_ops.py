@@ -506,7 +506,9 @@ def q_cep_facade(spark: SparkSession, sf_dir: str) -> DataFrame:
     .followedBy("p"))] — the driver-verifiable proof that the fluent
     migration surface compiles to the engine's sequence machines: a
     two-stage click…purchase relaxed-contiguity pattern under skip-past-
-    last, folded in codegen by cep._relaxed_machine. The oracle replays
+    last, folded by cep._relaxed_machine (one F.aggregate per user,
+    interpreted in the JVM — ArrayAggregate has no codegen path). The
+    oracle replays
     the identical 2-stage automaton as a recursive-CTE step relation
     (stage in acc%10, +9 closes a match), so the hash match pins the
     compiled machine itself, not just counts-by-construction. The same
@@ -557,8 +559,9 @@ def q_cep_repeated_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     login→login→alert shape the Flink CEP docs open with [FLINK-API:
     Pattern.begin(x).followedBy(x).followedBy(y)], here
     click→click→purchase under skip-past-last. Round 8's stage-INDEX
-    transition rework (cep._relaxed_machine compares the event's type
-    code against `stage_codes[stage]` via F.get, not a type→stage map)
+    transition rework (cep._relaxed_machine's transition,
+    cep._anchor_transition, tests the event against the awaited
+    STAGE's condition via F.get, not a type→stage map)
     is what makes this compile instead of raising. The oracle replays
     the identical 3-stage automaton as a recursive-CTE step relation
     whose advance condition is written PER STAGE (stage 0 needs click,
@@ -1285,9 +1288,9 @@ def q_cep_followed_by_any(spark: SparkSession, sf_dir: str) -> DataFrame:
     run, so the match set is ALL increasing view→click→purchase
     subsequences] (round 9): counting needs NO anchor sets — the
     subsequence-counting dynamic program with K longs of state
-    (cep._any_dp_machine), the cheapest machine in the engine (pure
-    codegen fold batch-side; the streaming twin carries K longs per
-    key over unbounded history). The oracle is a genuinely INDEPENDENT
+    (cep._any_dp_machine), the cheapest machine in the engine (one
+    F.aggregate over K longs batch-side; the streaming twin carries K
+    longs per key over unbounded history). The oracle is a genuinely INDEPENDENT
     triple self-join counting the increasing triples — no automaton
     replay on the DuckDB side at all. Property twin enumerates
     subsequences by brute force."""
@@ -1900,8 +1903,9 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain window SUMs cannot express.
 
     Spark runs the RECURRENCE: sort_array(collect_list(struct)) per user,
-    then `F.aggregate` folds the ordered array inside codegen — no Python,
-    no UDF, one shuffle on user_id. The oracle is the algebraically
+    then `F.aggregate` folds the ordered array in the JVM (interpreted
+    per element — ArrayAggregate is a CodegenFallback expression) — no
+    Python, no UDF, one shuffle on user_id. The oracle is the algebraically
     expanded closed form (geometric weights via pow), so the hash match
     proves fold ≡ closed form to 4 decimals. Order is pinned by the
     unique (ts, event_id) struct prefix. Scale: per-user arrays are
@@ -2495,9 +2499,10 @@ def q_cep_zero_or_more(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded fork-loop's enumeration (each view re-counts at every
     later in-horizon purchase — all qualifying (view, purchase)
     pairs), so the per-key counts ADD exactly
-    (cep._zero_or_more). The oracle states both addends independently
-    — a plain count and a band join — and sums them with a full outer
-    join. Streaming refuses loudly. Property twin:
+    (cep._zom_loop, cep._prefix_plus_loop). The oracle states both
+    addends independently — a plain count and a band join — and sums
+    them with a full outer join. Streaming runs both addends in one
+    keyed state row (cep.zero_or_more_stepper). Property twin:
     test_cep_zero_or_more_matches_brute_force."""
     from flink_tutorial_broadcast_spark.datastream import (
         StreamExecutionEnvironment,

@@ -850,7 +850,7 @@ def _per_user_ordered_val(rows):
 
 def _ref_relaxed_within_pred(seq, preds, within_min):
     """Single-anchor expire-then-step machine over predicate stages —
-    the pure-Python twin of cep._relaxed_within_machine with masks."""
+    the pure-Python twin of cep._relaxed_machine (within()) with masks."""
     K = len(preds)
     stage, cnt, anchor = 0, 0, 0
     for m, ty, v in seq:

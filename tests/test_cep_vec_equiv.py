@@ -24,8 +24,7 @@ from flink_tutorial_broadcast_spark.cep import (  # noqa: E402
     fork_loop_combos_stepper, fork_loop_combos_stepper_scalar,
     fork_loop_stepper, fork_loop_stepper_scalar, fork_stepper,
     fork_stepper_scalar, group_zom_stepper, group_zom_stepper_scalar,
-    relaxed_stepper, relaxed_stepper_scalar, relaxed_within_stepper,
-    relaxed_within_stepper_scalar, zero_or_more_stepper,
+    relaxed_stepper, relaxed_within_stepper, zero_or_more_stepper,
     zero_or_more_stepper_scalar,
 )
 
@@ -254,12 +253,87 @@ def test_fork_loop_combos_density_fault_matches_scalar():
                 pass
 
 
+def _combos_outcome(fn, batches, state):
+    """Drive one combos stepper from a preset state: the fault message
+    it raises, or its frames and final state."""
+    st = _St()
+    st._s = state
+    frames = []
+    try:
+        for pdf in batches:
+            for out in fn(("x",), iter([pdf]), st):
+                frames.append(out.to_dict("list"))
+    except ValueError as e:
+        return str(e)
+    return frames, _norm_state(st._s)
+
+
+def test_fork_loop_combos_density_fault_names_earliest_close():
+    """Two runs trip in one batch, in the opposite of the vectorized
+    arrays' order: the run carried in the awaiting set (first in the
+    arrays) reaches the bound at its 63rd close, the parked run carried
+    in state (last in the arrays) at its first. The fault must name the
+    parked run's register, as the scalar per-close loop does."""
+    limit = 1 << 61
+    n = 64
+    rows = pd.DataFrame({
+        "k": ["x"] * n,
+        "ts": pd.to_datetime(np.arange(1, n + 1, dtype="int64")
+                             * 1_000_000, utc=True).tz_localize(None),
+        "event_id": np.arange(n, dtype="int64"),
+        "__m": np.full(n, 2, dtype="int64"),
+    })
+    # (cnt, awaiting set s1, parked anchors, parked registers)
+    state = (0, [500_000], [0], [limit + 5])
+    want = _combos_outcome(
+        fork_loop_combos_stepper_scalar([1, 2], 10**9, None, ["k"], 0),
+        [rows], state)
+    assert f"c={limit + 5} " in want
+    got = _combos_outcome(
+        fork_loop_combos_stepper([1, 2], 10**9, None, ["k"], 0),
+        [rows], state)
+    assert got == want
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_fork_loop_combos_fault_parity_randomized(seed):
+    """Parked registers near the exact-BIGINT bound, carried in state:
+    scalar and vectorized steppers fault with the same message or not
+    at all (then with identical frames and state)."""
+    rng = random.Random(7000 + seed)
+    limit = 1 << 61
+    K = rng.choice([2, 3])
+    codes = [1, 2, 4][:K]
+    until = rng.choice([0, 8])
+    within = rng.choice([20_000, 200_000])
+    batches = _mk_batches(rng, rng.randrange(40, 90),
+                          rng.choice([1, 2]), 4, 1_000)
+    t0 = int(batches[0]["ts"].iloc[0].value // 1000) if len(batches[0]) \
+        else 0
+    anchors = sorted(t0 - rng.randrange(0, within)
+                     for _ in range(rng.randrange(1, 5)))
+    regs = [rng.choice([limit - rng.randrange(1, 1 << 40),
+                        limit + rng.randrange(0, 1 << 40),
+                        (1 << rng.randrange(40, 62)) - 1])
+            for _ in anchors]
+    parked = sorted(zip(anchors, regs))
+    sets = [sorted(t0 - rng.randrange(0, within)
+                   for _ in range(rng.randrange(0, 3)))
+            for _ in range(K - 1)]
+    state = (0, *sets, [a for a, _ in parked], [r for _, r in parked])
+    a = _combos_outcome(fork_loop_combos_stepper_scalar(
+        codes, within, None, ["k"], until), batches, state)
+    b = _combos_outcome(fork_loop_combos_stepper(
+        codes, within, None, ["k"], until), batches, state)
+    assert a == b, (seed, K, until, within, state)
+
+
 @pytest.mark.parametrize("seed", range(25))
 def test_relaxed_steppers_equivalence(seed):
-    """relaxed/relaxed_within dispatch to the scalar machines (the
-    r14 jump variant measured slower and was rejected — see cep.py),
-    so this pins alias == implementation and keeps the harness for a
-    future revisit."""
+    """The single-anchor steppers carry a whole run in their O(1)
+    state (cnt, stage[, anchor]): driving the events over several
+    micro-batches must end with the same last emitted row and the same
+    state as one micro-batch holding all of them."""
     rng = random.Random(6000 + seed)
     K = rng.choice([1, 2, 3, 4])
     codes = [rng.choice(BITS) for _ in range(K)]
@@ -271,16 +345,15 @@ def test_relaxed_steppers_equivalence(seed):
         veto[j] = v
     within = rng.choice([2_000, 20_000])
     batches = _mk_batches(rng, rng.randrange(30, 120),
-                          rng.choice([1, 2, 3]), 4, 1_000)
-    a = _drive([relaxed_stepper_scalar(None, codes, strict, ["k"],
-                                       veto)], batches)[0]
-    b = _drive([relaxed_stepper(None, codes, strict, ["k"], veto)],
-               batches)[0]
-    _assert_same(a, b, ("relaxed", seed, K, codes, strict, veto))
-    a = _drive([relaxed_within_stepper_scalar(None, codes, within,
-                                              strict, ["k"], veto)],
-               batches)[0]
-    b = _drive([relaxed_within_stepper(None, codes, within, strict,
-                                       ["k"], veto)], batches)[0]
-    _assert_same(a, b, ("within", seed, K, codes, strict, veto,
-                        within))
+                          rng.choice([2, 3, 4]), 4, 1_000)
+    whole = [pd.concat(batches, ignore_index=True)]
+    for name, make in (
+            ("relaxed", lambda: relaxed_stepper(None, codes, strict,
+                                                ["k"], veto)),
+            ("within", lambda: relaxed_within_stepper(
+                None, codes, within, strict, ["k"], veto))):
+        (split_frames, split_state), = _drive([make()], batches)
+        (one_frames, one_state), = _drive([make()], whole)
+        ctx = (name, seed, K, codes, strict, veto, within)
+        assert split_frames[-1] == one_frames[-1], ctx
+        assert _norm_state(split_state) == _norm_state(one_state), ctx

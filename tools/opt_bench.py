@@ -1,7 +1,9 @@
 """Optimization measurement harness (guide §1), r13/r14.
 
 For each named query at $SPARK_GRAFT_SF_DIR (default sf0.1):
-  - captures ``explain("formatted")`` to plans/$OPT_ROUND/<key>_<tag>.txt (default r14),
+  - captures ``explain("formatted")`` to plans/$OPT_ROUND/<key>_<tag>.txt
+    (default r14); an existing capture is never overwritten — the run
+    exits non-zero naming it before any work,
   - times the computation with the noop sink (guide §1.4 — computes
     every column of every row, no sink cost, full plan in the SQL tab)
     AND with the bench's count() action (the driver-comparable number),
@@ -54,6 +56,13 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     reps = int(os.environ.get("OPT_REPS", "3"))
     os.makedirs(PLANS_DIR, exist_ok=True)
+    taken = [path for path in (os.path.join(PLANS_DIR, f"{k}_{tag}.txt")
+                               for k in keys) if os.path.exists(path)]
+    if taken:
+        # committed captures are evidence: a rerun needs a new OPT_ROUND
+        sys.exit("opt_bench: refusing to overwrite existing plan "
+                 f"capture(s) {', '.join(taken)} — set OPT_ROUND to a "
+                 "new directory")
 
     queries = load_all_queries()
     spark = get_spark("opt-bench")
