@@ -99,23 +99,62 @@ def test_broadcast_rules_stream_sees_mutated_rules(spark):
     assert out.count() == 0  # thresholds of 1e9 → nothing fires
 
 
-def test_keyed_state_stream_totals_match_batch(spark):
-    stream = jobs.keyed_state_stream(spark, SF_SMOKE)
+def _batch_totals(df):
+    return (df.groupBy("user_id")
+            .agg(F.count("*").alias("n_events"),
+                 F.round(F.sum("value"), 2).alias("total_value"),
+                 F.max("value").alias("max_value")))
+
+
+def test_keyed_state_stream_totals_match_batch(spark, monkeypatch):
+    from pyspark.sql.streaming.readwriter import DataStreamWriter
+
     from flink_tutorial_broadcast_spark.io import load
-    batch = (
-        load(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"),
-             F.round(F.sum("value"), 2).alias("total_value"),
-             F.max("value").alias("max_value"))
-    )
+
+    started = []
+    start = DataStreamWriter.start
+
+    def spy(self, *args, **kwargs):
+        started.append(start(self, *args, **kwargs))
+        return started[-1]
+
+    monkeypatch.setattr(DataStreamWriter, "start", spy)
+    stream = jobs.keyed_state_stream(spark, SF_SMOKE)
+    [q] = started
+    # the running totals are a native stateful aggregate: the JVM state
+    # store writes the per-user buffers, no Python worker runs
+    plan = (q._jsq.streamingQuery().lastExecution()
+            .executedPlan().toString())
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "StateStoreSave" in plan
+
+    events = load(spark, SF_SMOKE, "events")
+    batch = _batch_totals(events)
+    n_users = events.select("user_id").distinct().count()
+    [state_op] = q.lastProgress["stateOperators"]
+    assert state_op["numRowsTotal"] == n_users
     sk = _kv(stream, ("user_id",), "n_events")
     bk = _kv(batch, ("user_id",), "n_events")
     assert sk == bk
     st = _kv(stream, ("user_id",), "total_value")
     bt = _kv(batch, ("user_id",), "total_value")
     for k in bt:
-        assert abs(st[k] - bt[k]) < 0.05, k
+        assert abs(st[k] - bt[k]) < 0.01 + 1e-9, k
+
+
+def test_keyed_state_totals_null_values_match_batch(spark, tmp_path):
+    """NULL values: count(*) counts them, sum and max skip them, and a
+    user with only NULL values has NULL total and max, as in the batch
+    groupBy."""
+    rows = [(1, 5.0), (1, None), (2, None), (2, None), (3, 7.25)]
+    schema = "user_id long, value double"
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "src"))
+    sdf = spark.readStream.schema(schema).parquet(str(tmp_path / "src"))
+    stream = jobs._run_to_memory(jobs.keyed_state_totals(sdf), "update")
+    batch = _batch_totals(spark.createDataFrame(rows, schema))
+    assert sorted(map(tuple, stream.collect())) \
+        == sorted(map(tuple, batch.collect())) \
+        == [(1, 2, 5.0, 5.0), (2, 2, None, None), (3, 1, 7.25, 7.25)]
 
 
 def test_interval_join_stream_matches_batch(spark, queries):
